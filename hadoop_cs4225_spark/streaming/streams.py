@@ -16,6 +16,11 @@ upsert targets.
 
 from __future__ import annotations
 
+import os
+import shutil
+import weakref
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -425,14 +430,11 @@ def run_foreach_batch_parquet(
 
 
 def _snapshot_versions(root: str, below: int | None = None) -> list[int]:
-    """Committed snapshot versions (``v<N>`` dirs) under ``root``,
-    optionally only those strictly below a batch id — the sink-side
-    source of truth for versioned foreachBatch MERGE sinks (never track
-    the previous version in process memory: restart replay and
-    crash-written snapshots both break that, see
-    ``run_incremental_daily_rollup``)."""
-    import os
-
+    """Snapshot versions (``v<N>`` dirs) under ``root``, optionally only
+    those strictly below a batch id — the sink-side source of truth for
+    versioned foreachBatch MERGE sinks (never track the previous version
+    in process memory: restart replay and crash-written snapshots both
+    break that, see ``run_incremental_daily_rollup``)."""
     if not os.path.isdir(root):
         return []
     out = []
@@ -469,12 +471,232 @@ def _prune_snapshots(root: str, batch_id: int) -> None:
     and its merge reads max(v < batch_id) = v{batch_id-1} — so keeping
     the current and previous snapshot is sufficient for crash safety,
     and disk stays O(2 snapshots) instead of O(batches)."""
-    import os
-    import shutil
-
     for v in _snapshot_versions(root):
         if v <= batch_id - 2:
             shutil.rmtree(os.path.join(root, f"v{v}"), ignore_errors=True)
+
+
+# ---------------------------------------------------------------------
+# Versioned maintainers. Every ``run_incremental_*`` below is one
+# ``availableNow`` file stream over a chunk directory (one file per
+# micro-batch) whose foreachBatch merges the batch into a sink of
+# ``v{batch_id}`` directories, in one of two layouts:
+#
+# - SNAPSHOT (:func:`_run_snapshot`): ``v{b}`` holds the whole merged
+#   index; the batch reads the newest snapshot below ``b``, writes the
+#   merge and prunes to the last two snapshots. O(index) per batch —
+#   for indexes whose rows change under a merge (absorbed counts,
+#   summed cells).
+# - APPEND (:func:`_run_append`): for append algebra (documents and
+#   vectors are immutable), ``v{b}/<part>`` holds ONLY batch ``b``'s
+#   rows and is kept; the index is the union of the committed parts.
+#   An optional side table (``key -> sums``) is rewritten per batch
+#   from the previous one plus the contribution read back from the
+#   just-written part, and pruned below ``b-1``. Every byte batch ``b``
+#   writes stays under ``v{b}``.
+#
+# Both replay the same way: a replayed batch overwrites its own
+# ``v{b}`` and re-merges against the newest committed version below
+# ``b``. No steady batch infers a schema: parts and snapshots are read
+# with pinned DDL, and the chunk directory's schema is inferred at most
+# once per (session, checkpoint). A pinned read of zero paths is the
+# empty index: an empty file scan, where ``createDataFrame([], ddl)``
+# would be an RDD scan that starts Python workers on first use.
+# ---------------------------------------------------------------------
+
+#: Chunk-directory schemas per session, keyed by (chunks, checkpoint):
+#: a file stream's source schema is fixed for the life of its checkpoint.
+_SOURCE_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _source_schema(spark: SparkSession, chunks: str, checkpoint: str):
+    """The chunk directory's schema; inferred (one job) only on the
+    first call for a checkpoint, or when the checkpoint is gone (a new
+    stream)."""
+    cache = _SOURCE_SCHEMAS.setdefault(spark, {})
+    key = (chunks, checkpoint)
+    if key not in cache or not os.path.isdir(checkpoint):
+        cache[key] = spark.read.parquet(chunks).schema
+    return cache[key]
+
+
+def _maintain(
+    spark: SparkSession, chunks: str, root: str, checkpoint: str, name: str, step
+) -> None:
+    """Drain ``chunks`` through ``step(batch_df, batch_id)`` behind the
+    incarnation guard. A ``timestamp_ntz`` ``ts`` arrives as TIMESTAMP
+    (LTZ; session tz is UTC, so the cast is value-identical)."""
+    stream = (
+        spark.readStream.schema(_source_schema(spark, chunks, checkpoint))
+        .option("maxFilesPerTrigger", 1)
+        .parquet(chunks)
+    )
+    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
+        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        _guard_incarnation(root, batch_id)
+        step(batch_df, batch_id)
+
+    q = (
+        stream.writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await_bounded(q, name)
+
+
+def _run_snapshot(
+    spark: SparkSession,
+    chunks: str,
+    root: str,
+    checkpoint: str,
+    name: str,
+    ddl: str,
+    merge,
+    part: str | None = None,
+    partition_by: str | None = None,
+) -> DataFrame:
+    """SNAPSHOT layout: ``merge(batch_df, prev)`` → the whole index as
+    ``v{batch_id}[/part]``, where ``prev`` is the newest snapshot below
+    the batch (empty before the first). Returns the newest snapshot."""
+
+    def path(v: int) -> str:
+        vdir = os.path.join(root, f"v{v}")
+        return os.path.join(vdir, part) if part else vdir
+
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        prior = _snapshot_versions(root, below=batch_id)
+        prev = batch_df.sparkSession.read.schema(ddl).parquet(
+            *[path(v) for v in sorted(prior)[-1:]]
+        )
+        merged = merge(batch_df, prev)
+        writer = (
+            merged.repartition(partition_by).write.partitionBy(partition_by)
+            if partition_by
+            else merged.write
+        )
+        writer.mode("overwrite").parquet(path(batch_id))
+        _prune_snapshots(root, batch_id)
+
+    _maintain(spark, chunks, root, checkpoint, name, step)
+    versions = _snapshot_versions(root)
+    return spark.read.schema(ddl).parquet(*[path(v) for v in sorted(versions)[-1:]])
+
+
+class _Side(NamedTuple):
+    """Side table of an APPEND index: ``key -> sums``, where each row of
+    the last append part adds ``adds[col]`` to its key's ``col``."""
+
+    part: str
+    ddl: str
+    key: str
+    adds: dict
+
+
+def _committed(root: str, marker: str, below: int | None = None) -> list[int]:
+    """Committed versions of an APPEND sink, oldest first. A version
+    commits when its last-written ``marker`` part finishes (``_SUCCESS``);
+    every version up to the newest such one is committed, also after its
+    side table was pruned. A later ``v{b}`` is an uncommitted remnant that
+    the replay of batch ``b`` overwrites."""
+    done = [
+        v
+        for v in _snapshot_versions(root, below)
+        if os.path.exists(os.path.join(root, f"v{v}", marker, "_SUCCESS"))
+    ]
+    return sorted(v for v in _snapshot_versions(root) if done and v <= max(done))
+
+
+def _run_append(
+    spark: SparkSession,
+    chunks: str,
+    root: str,
+    checkpoint: str,
+    name: str,
+    parts: list[tuple],
+    side: _Side | None = None,
+) -> dict[str, DataFrame]:
+    """APPEND layout: ``parts`` is ``[(part, ddl, build), ...]`` in write
+    order; the first ``build`` gets the batch, each later one the part
+    before it read back. Returns ``{part: committed frame}``: each append
+    part as the union over committed versions, the side table as of the
+    newest one."""
+    marker = side.part if side else parts[-1][0]
+
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        sess = batch_df.sparkSession
+        out = os.path.join(root, f"v{batch_id}")
+        rows = batch_df
+        for part, ddl, build in parts:
+            build(rows).write.mode("overwrite").parquet(os.path.join(out, part))
+            rows = sess.read.schema(ddl).parquet(os.path.join(out, part))
+        if side is None:
+            return
+        prior = _committed(root, marker, below=batch_id)
+        prev = sess.read.schema(side.ddl).parquet(
+            *[os.path.join(root, f"v{v}", side.part) for v in prior[-1:]]
+        )
+        contrib = rows.select(
+            side.key, *[e.cast("long").alias(c) for c, e in side.adds.items()]
+        )
+        (
+            prev.unionByName(contrib)
+            .groupBy(side.key)
+            .agg(*[F.sum(c).cast("long").alias(c) for c in side.adds])
+            .write.mode("overwrite")
+            .parquet(os.path.join(out, side.part))
+        )
+        for v in _snapshot_versions(root, below=batch_id - 1):
+            shutil.rmtree(os.path.join(root, f"v{v}", side.part), ignore_errors=True)
+
+    _maintain(spark, chunks, root, checkpoint, name, step)
+    versions = _committed(root, marker)
+    out = {
+        part: spark.read.schema(ddl).parquet(
+            *[os.path.join(root, f"v{v}", part) for v in versions]
+        )
+        for part, ddl, _ in parts
+    }
+    if side:
+        out[side.part] = spark.read.schema(side.ddl).parquet(
+            *[os.path.join(root, f"v{v}", side.part) for v in versions[-1:]]
+        )
+    return out
+
+
+def _run_signature_index(
+    spark: SparkSession,
+    chunks: str,
+    root: str,
+    checkpoint: str,
+    name: str,
+    frame,
+    keys: list[str],
+) -> DataFrame:
+    """SNAPSHOT signature index ``(*keys, doc_id, n_dups_absorbed)``:
+    within-batch collapse keeps the min doc_id per key, then a full outer
+    merge on the key — an existing key absorbs all the batch's arrivals;
+    an unseen one appends, its first arrival not counted as a duplicate."""
+
+    def merge(batch_df: DataFrame, prev: DataFrame) -> DataFrame:
+        batch = frame(batch_df).groupBy(*keys).agg(
+            F.count(F.lit(1)).alias("n_arrivals"),
+            F.min("doc_id").alias("first_doc"),
+        )
+        return prev.join(batch, keys, "full").select(
+            *keys,
+            F.coalesce("doc_id", "first_doc").alias("doc_id"),
+            (
+                F.coalesce("n_dups_absorbed", F.lit(0))
+                + F.coalesce("n_arrivals", F.lit(0))
+                - F.when(F.col("doc_id").isNull(), 1).otherwise(0)
+            ).alias("n_dups_absorbed"),
+        )
+
+    ddl = "".join(f"{k} long, " for k in keys) + "doc_id long, n_dups_absorbed long"
+    return _run_snapshot(spark, chunks, root, checkpoint, name, ddl, merge)
 
 
 def run_incremental_corpus_dedup(
@@ -492,9 +714,8 @@ def run_incremental_corpus_dedup(
     min doc_id per signature; (3) a full-outer merge with the previous
     index snapshot on the signature key (existing signatures absorb the
     batch's arrivals, unseen ones append); (4) the merged index commits
-    as snapshot ``v{batch_id}`` (commit-then-swap, previous version
-    discovered from the sink — restart-safe and crash-idempotent
-    exactly like ``run_incremental_daily_rollup``).
+    as snapshot ``v{batch_id}`` (SNAPSHOT layout, see
+    :func:`_run_snapshot`: restart-safe and crash-idempotent).
 
     Scale honesty: signature COMPUTATION scales with the batch, but the
     snapshot model rewrites the full index per batch — O(index) per
@@ -502,7 +723,7 @@ def run_incremental_corpus_dedup(
     is mechanical: store the index bucketed on the signature key and
     replace the snapshot write with a MERGE into the bucketed table
     (Delta/Iceberg MERGE, or a per-bucket upsert) so a batch touches
-    only the buckets its signatures hash to; the merge ALGEBRA below
+    only the buckets its signatures hash to; the merge ALGEBRA
     (full-outer on the key, coalesce keeper, sum absorbed counts) is
     exactly what that MERGE states.
 
@@ -511,67 +732,12 @@ def run_incremental_corpus_dedup(
     document that introduced the signature and n_dups_absorbed counts
     later arrivals it suppressed (within-batch and cross-batch).
     """
-    import os
-
     from hadoop_cs4225_spark.operators.dedup import signature_frame
 
-    _SIG = ["mh0", "mh1", "mh2", "mh3"]
-    schema = spark.read.parquet(docs_chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_chunks)
+    return _run_signature_index(
+        spark, docs_chunks, index_root, checkpoint, "incremental_corpus_dedup",
+        signature_frame, ["mh0", "mh1", "mh2", "mh3"],
     )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(index_root, batch_id)
-        batch_counts = signature_frame(batch_df).groupBy(*_SIG).agg(
-            F.count(F.lit(1)).alias("n_arrivals"),
-            F.min("doc_id").alias("first_doc"),
-        )
-        prior = _snapshot_versions(index_root, below=batch_id)
-        if prior:
-            prev = batch_df.sparkSession.read.parquet(
-                os.path.join(index_root, f"v{max(prior)}")
-            )
-            # Full outer on the signature key: an EXISTING signature
-            # absorbs all the batch's arrivals for it; an unseen one
-            # appends, its first arrival not counted as a duplicate.
-            merged = prev.join(batch_counts, _SIG, "full").select(
-                *_SIG,
-                F.coalesce("doc_id", "first_doc").alias("doc_id"),
-                (
-                    F.coalesce("n_dups_absorbed", F.lit(0))
-                    + F.coalesce("n_arrivals", F.lit(0))
-                    - F.when(F.col("doc_id").isNull(), 1).otherwise(0)
-                ).alias("n_dups_absorbed"),
-            )
-        else:
-            merged = batch_counts.select(
-                *_SIG,
-                F.col("first_doc").alias("doc_id"),
-                (F.col("n_arrivals") - 1).alias("n_dups_absorbed"),
-            )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(index_root, f"v{batch_id}")
-        )
-        _prune_snapshots(index_root, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q, "incremental_corpus_dedup")
-    versions = _snapshot_versions(index_root)
-    if not versions:
-        return spark.createDataFrame(
-            [],
-            "mh0 long, mh1 long, mh2 long, mh3 long, "
-            "doc_id long, n_dups_absorbed long",
-        )
-    return spark.read.parquet(os.path.join(index_root, f"v{max(versions)}"))
 
 
 def run_incremental_simhash_dedup(
@@ -598,61 +764,12 @@ def run_incremental_simhash_dedup(
     keeps the near-dup surface current without re-fingerprinting the
     corpus. Returns the final index ``(f, doc_id, n_dups_absorbed)``.
     """
-    import os
-
     from hadoop_cs4225_spark.operators.dedup import simhash60_frame
 
-    schema = spark.read.parquet(docs_chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_chunks)
+    return _run_signature_index(
+        spark, docs_chunks, index_root, checkpoint, "incremental_simhash_dedup",
+        simhash60_frame, ["f"],
     )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(index_root, batch_id)
-        batch_counts = simhash60_frame(batch_df).groupBy("f").agg(
-            F.count(F.lit(1)).alias("n_arrivals"),
-            F.min("doc_id").alias("first_doc"),
-        )
-        prior = _snapshot_versions(index_root, below=batch_id)
-        if prior:
-            prev = batch_df.sparkSession.read.parquet(
-                os.path.join(index_root, f"v{max(prior)}")
-            )
-            merged = prev.join(batch_counts, ["f"], "full").select(
-                "f",
-                F.coalesce("doc_id", "first_doc").alias("doc_id"),
-                (
-                    F.coalesce("n_dups_absorbed", F.lit(0))
-                    + F.coalesce("n_arrivals", F.lit(0))
-                    - F.when(F.col("doc_id").isNull(), 1).otherwise(0)
-                ).alias("n_dups_absorbed"),
-            )
-        else:
-            merged = batch_counts.select(
-                "f",
-                F.col("first_doc").alias("doc_id"),
-                (F.col("n_arrivals") - 1).alias("n_dups_absorbed"),
-            )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(index_root, f"v{batch_id}")
-        )
-        _prune_snapshots(index_root, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q, "incremental_simhash_dedup")
-    versions = _snapshot_versions(index_root)
-    if not versions:
-        return spark.createDataFrame(
-            [], "f long, doc_id long, n_dups_absorbed long"
-        )
-    return spark.read.parquet(os.path.join(index_root, f"v{max(versions)}"))
 
 
 def run_incremental_shingle_postings(
@@ -663,23 +780,24 @@ def run_incremental_shingle_postings(
     (VERDICT r12 task 5: it was the one written layout without one).
     Each micro-batch of NEW documents is shingled with the shared
     :func:`operators.dedup._shingle_sets` (identical definition to the
-    batch build) and merged into a persistent two-part snapshot:
+    batch build) into the APPEND layout (see :func:`_run_append`):
 
-    - ``postings/``: one row per (doc, distinct shingle) carrying
-      ``doc_id, s, len`` — grows by exactly the batch's rows (append
-      algebra: documents are immutable, so prior postings never change);
-    - ``df/``: the shingle → document-frequency side table — the df
-      RECOUNT touches only the batch's shingles (full-outer merge of
-      the previous df with the batch's per-shingle doc counts; untouched
-      shingles pass through unchanged).
+    - ``v{b}/postings/``: batch ``b``'s rows ``doc_id, s, len``, one per
+      (doc, distinct shingle), written once and kept (documents are
+      immutable, so prior postings never change); the index's postings
+      are the union over committed versions;
+    - ``v{b}/df/``: the shingle → document-frequency side table, the
+      previous one plus the batch postings' per-shingle counts (read
+      back from ``v{b}/postings``); untouched shingles pass through.
 
-    Commit-then-swap as ``v{batch_id}`` (previous version discovered
-    from the sink — restart-safe, crash-idempotent: a replayed batch
-    re-merges against v{batch_id-1}, reproducing the same v{batch_id}).
-    Snapshot rewrite is O(index) like the MinHash/SimHash twins; at
-    100 TB both parts become bucketed MERGEs (postings bucketed by s,
-    df by s) so a batch touches only its buckets — the merge algebra
-    below is exactly what that MERGE states.
+    Per batch the writes are O(batch) postings plus one df table. The
+    final read lists one postings dir per batch (past Spark's 32-path
+    threshold that adds one parallel-listing job; compacting parts is a
+    later item). ``explode_outer`` is deliberate: ``_shingle_sets``
+    only keeps docs with >= 3 tokens, so every ``sh`` is non-empty and
+    the rows equal ``explode``'s, but plain ``explode`` gets an inferred
+    ``size(sh) > 0`` filter that re-evaluates the whole shingle lambda
+    (sf0.1 documents on 4 cores: 11.9-17.5 s vs 0.8-1.4 s).
 
     The PPJoin rank ``rn`` stored by the batch layout is a DERIVED
     column (row_number over (df, s) per doc): any df change re-ranks
@@ -688,68 +806,23 @@ def run_incremental_shingle_postings(
     ``(doc_id, s, df, len)``, from which one partitioned window
     reproduces the batch layout exactly (pinned in tests).
     """
-    import os
-
     from hadoop_cs4225_spark.operators.dedup import _shingle_sets
 
-    schema = spark.read.parquet(docs_chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_chunks)
+    idx = _run_append(
+        spark, docs_chunks, index_root, checkpoint,
+        "incremental_shingle_postings",
+        [(
+            "postings",
+            "doc_id long, s string, len long",
+            lambda b: _shingle_sets(b).select(
+                "doc_id",
+                F.size("sh").cast("long").alias("len"),
+                F.explode_outer("sh").alias("s"),
+            ).select("doc_id", "s", "len"),
+        )],
+        _Side("df", "s string, df long", "s", {"df": F.lit(1)}),
     )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(index_root, batch_id)
-        sess = batch_df.sparkSession
-        batch_posts = _shingle_sets(batch_df).select(
-            "doc_id",
-            F.size("sh").cast("long").alias("len"),
-            F.explode("sh").alias("s"),
-        ).select("doc_id", "s", "len")
-        # per-shingle df delta: postings are (doc, s)-unique, so a row
-        # count per s is the number of batch docs containing s
-        batch_dfc = batch_posts.groupBy("s").agg(
-            F.count(F.lit(1)).cast("long").alias("d_df")
-        )
-        prior = _snapshot_versions(index_root, below=batch_id)
-        if prior:
-            vdir = os.path.join(index_root, f"v{max(prior)}")
-            posts_prev = sess.read.parquet(os.path.join(vdir, "postings"))
-            df_prev = sess.read.parquet(os.path.join(vdir, "df"))
-            posts_new = posts_prev.unionByName(batch_posts)
-            df_new = df_prev.join(batch_dfc, ["s"], "full").select(
-                "s",
-                (
-                    F.coalesce("df", F.lit(0)) + F.coalesce("d_df", F.lit(0))
-                ).cast("long").alias("df"),
-            )
-        else:
-            posts_new = batch_posts
-            df_new = batch_dfc.select("s", F.col("d_df").alias("df"))
-        out = os.path.join(index_root, f"v{batch_id}")
-        posts_new.write.mode("overwrite").parquet(
-            os.path.join(out, "postings")
-        )
-        df_new.write.mode("overwrite").parquet(os.path.join(out, "df"))
-        _prune_snapshots(index_root, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q, "incremental_shingle_postings")
-    versions = _snapshot_versions(index_root)
-    if not versions:
-        return spark.createDataFrame(
-            [], "doc_id long, s string, df long, len long"
-        )
-    vdir = os.path.join(index_root, f"v{max(versions)}")
-    posts = spark.read.parquet(os.path.join(vdir, "postings"))
-    dfs = spark.read.parquet(os.path.join(vdir, "df"))
-    return posts.join(dfs, "s").select("doc_id", "s", "df", "len")
+    return idx["postings"].join(idx["df"], "s").select("doc_id", "s", "df", "len")
 
 
 def run_incremental_token_counts(
@@ -762,99 +835,39 @@ def run_incremental_token_counts(
     layout, the one written index added since). Each micro-batch of NEW
     documents is tokenized with the shared
     :func:`operators.text_analysis._toks` (identical definition to the
-    batch build) and merged into a persistent two-part snapshot:
+    batch build) into the APPEND layout (see :func:`_run_append`):
 
-    - ``tf/``: one row per (doc, distinct word) carrying ``doc_id,
-      source, word, tf`` — a document's rows are complete within its
-      batch (each source row is one immutable document), so the merge
-      is a pure append and prior rows never change;
-    - ``vocab/``: the ``word -> (df, cf)`` side table — the recount
-      touches ONLY the batch's words (full-outer merge of the previous
-      vocab with the batch's per-word doc/token counts; untouched words
-      pass through unchanged).
+    - ``v{b}/tf/``: batch ``b``'s rows ``doc_id, source, word, tf``, one
+      per (doc, distinct word), written once and kept — a document's
+      rows are complete within its batch (each source row is one
+      immutable document); the index's tf is the union over committed
+      versions;
+    - ``v{b}/vocab/``: the ``word -> (df, cf)`` side table, the previous
+      one plus the batch's per-word doc/token counts read back from
+      ``v{b}/tf`` (no second tokenize pass); untouched words pass
+      through unchanged.
 
-    Commit-then-swap as ``v{batch_id}`` (previous version discovered
-    from the sink — restart-safe, crash-idempotent: a replayed batch
-    re-merges against v{batch_id-1}, reproducing the same
-    v{batch_id}). Snapshot rewrite is O(index) like the other twins; at
-    100 TB both parts become bucketed MERGEs (tf bucketed by word or
-    doc_id per the dominant consumer, vocab by word) so a batch touches
-    only its buckets — the merge algebra below is exactly what that
-    MERGE states. Returns the joined ``(doc_id, source, word, tf, df,
-    cf)`` frame; the batch layouts are its two projections (pinned in
-    tests/test_streaming.py).
+    Per batch the writes are O(batch) tf rows plus one vocab table; the
+    final read lists one tf dir per batch (see the shingle twin on the
+    32-path listing threshold). Returns the joined ``(doc_id, source,
+    word, tf, df, cf)`` frame; the batch layouts are its two projections
+    (pinned in tests/test_streaming.py).
     """
-    import os
-
     from hadoop_cs4225_spark.operators.text_analysis import _toks
 
-    schema = spark.read.parquet(docs_chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_chunks)
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(index_root, batch_id)
-        sess = batch_df.sparkSession
-        batch_tf = (
-            batch_df.select(
-                "doc_id", "source", F.explode(_toks()).alias("word")
-            )
+    idx = _run_append(
+        spark, docs_chunks, index_root, checkpoint, "incremental_token_counts",
+        [(
+            "tf",
+            "doc_id long, source string, word string, tf long",
+            lambda b: b.select("doc_id", "source", F.explode(_toks()).alias("word"))
             .groupBy("doc_id", "source", "word")
-            .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        )
-        # per-word vocab delta: tf rows are (doc, word)-unique, so the
-        # row count per word is the batch's df contribution
-        batch_vocab = batch_tf.groupBy("word").agg(
-            F.count(F.lit(1)).cast("long").alias("d_df"),
-            F.sum("tf").cast("long").alias("d_cf"),
-        )
-        prior = _snapshot_versions(index_root, below=batch_id)
-        if prior:
-            vdir = os.path.join(index_root, f"v{max(prior)}")
-            tf_prev = sess.read.parquet(os.path.join(vdir, "tf"))
-            vocab_prev = sess.read.parquet(os.path.join(vdir, "vocab"))
-            tf_new = tf_prev.unionByName(batch_tf)
-            vocab_new = vocab_prev.join(batch_vocab, ["word"], "full").select(
-                "word",
-                (
-                    F.coalesce("df", F.lit(0)) + F.coalesce("d_df", F.lit(0))
-                ).cast("long").alias("df"),
-                (
-                    F.coalesce("cf", F.lit(0)) + F.coalesce("d_cf", F.lit(0))
-                ).cast("long").alias("cf"),
-            )
-        else:
-            tf_new = batch_tf
-            vocab_new = batch_vocab.select(
-                "word",
-                F.col("d_df").alias("df"),
-                F.col("d_cf").alias("cf"),
-            )
-        out = os.path.join(index_root, f"v{batch_id}")
-        tf_new.write.mode("overwrite").parquet(os.path.join(out, "tf"))
-        vocab_new.write.mode("overwrite").parquet(os.path.join(out, "vocab"))
-        _prune_snapshots(index_root, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+            .agg(F.count(F.lit(1)).cast("long").alias("tf")),
+        )],
+        _Side("vocab", "word string, df long, cf long", "word",
+              {"df": F.lit(1), "cf": F.col("tf")}),
     )
-    _await_bounded(q, "incremental_token_counts")
-    versions = _snapshot_versions(index_root)
-    if not versions:
-        return spark.createDataFrame(
-            [], "doc_id long, source string, word string, tf long, "
-            "df long, cf long"
-        )
-    vdir = os.path.join(index_root, f"v{max(versions)}")
-    tf = spark.read.parquet(os.path.join(vdir, "tf"))
-    vocab = spark.read.parquet(os.path.join(vdir, "vocab"))
-    return tf.join(vocab, "word").select(
+    return idx["tf"].join(idx["vocab"], "word").select(
         "doc_id", "source", "word", "tf", "df", "cf"
     )
 
@@ -870,50 +883,18 @@ def run_incremental_winnow_fps(
     shingle hashes), so the merge algebra is the simplest of the twins:
     each micro-batch's ``(doc_id, n_sel, fp)`` rows — computed with the
     shared :func:`operators.dedup._winnow_fp_rows`, identical
-    definition to the batch build — are appended; no cross-document
-    recount exists to maintain. Commit-then-swap as ``v{batch_id}``
-    (restart-safe, crash-idempotent); at 100 TB the snapshot rewrite
-    becomes a bucketed-by-``fp`` MERGE so the pair join keeps reading a
+    definition to the batch build — are written once to ``v{b}/fps``
+    (APPEND layout, no side table; see :func:`_run_append`) and the
+    index is the union over committed versions. At 100 TB the parts
+    are written bucketed by ``fp`` so the pair join keeps reading a
     co-partitioned table.
     """
-    import os
-
     from hadoop_cs4225_spark.operators.dedup import _winnow_fp_rows
 
-    schema = spark.read.parquet(docs_chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_chunks)
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(index_root, batch_id)
-        sess = batch_df.sparkSession
-        batch_fps = _winnow_fp_rows(batch_df)
-        prior = _snapshot_versions(index_root, below=batch_id)
-        if prior:
-            vdir = os.path.join(index_root, f"v{max(prior)}")
-            fps_prev = sess.read.parquet(os.path.join(vdir, "fps"))
-            fps_new = fps_prev.unionByName(batch_fps)
-        else:
-            fps_new = batch_fps
-        out = os.path.join(index_root, f"v{batch_id}")
-        fps_new.write.mode("overwrite").parquet(os.path.join(out, "fps"))
-        _prune_snapshots(index_root, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q, "incremental_winnow_fps")
-    versions = _snapshot_versions(index_root)
-    if not versions:
-        return spark.createDataFrame([], "doc_id long, n_sel long, fp long")
-    vdir = os.path.join(index_root, f"v{max(versions)}")
-    return spark.read.parquet(os.path.join(vdir, "fps"))
+    return _run_append(
+        spark, docs_chunks, index_root, checkpoint, "incremental_winnow_fps",
+        [("fps", "doc_id long, n_sel long, fp long", _winnow_fp_rows)],
+    )["fps"]
 
 
 def run_incremental_ivf_assign(
@@ -926,92 +907,38 @@ def run_incremental_ivf_assign(
     with the shared :func:`operators.similarity._ivf_assign_col`
     (identical argmax definition to the batch index and the DuckDB
     oracles — frozen centroids, the production regime where the coarse
-    quantizer is trained once and reused across ingest), then merged
-    into a persistent two-part snapshot:
+    quantizer is trained once and reused across ingest), into the
+    APPEND layout (see :func:`_run_append`):
 
-    - ``postings/``: one row per vector — ``centroid_id, vec_id,
-      label`` — grows by exactly the batch's rows (append algebra:
-      vectors are immutable, so prior assignments never change);
-    - ``lists/``: the per-centroid inverted-list size table; the
-      recount touches only the batch's centroids (full-outer merge of
-      the previous sizes with the batch's per-centroid counts).
+    - ``v{b}/postings/``: batch ``b``'s rows ``centroid_id, vec_id,
+      label``, one per vector, written once and kept (vectors are
+      immutable, so prior assignments never change);
+    - ``v{b}/lists/``: the per-centroid inverted-list size table, the
+      previous one plus the batch postings' per-centroid counts.
 
-    Commit-then-swap as ``v{batch_id}`` (restart-safe,
-    crash-idempotent: a replayed batch re-merges against
-    v{batch_id-1}, reproducing the same v{batch_id}). At 100 TB the
-    postings part is ``partitionBy(centroid_id)`` appends — a batch
-    writes only its touched list directories, queries keep
+    At 100 TB the postings parts are ``partitionBy(centroid_id)`` — a
+    batch writes only its touched list directories, queries keep
     DPP-pruning to probed lists (``pq.ensure_ivf_pq_index``'s layout)
     — and the sizes part drives the list-balance audit
     (``ann_index_balance_audit``) without a full index scan.
 
     Returns the final index ``(centroid_id, vec_id, label, n_list)``.
     """
-    import os
-
     from hadoop_cs4225_spark.operators.similarity import _ivf_assign_col
 
-    schema = spark.read.parquet(emb_chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(emb_chunks)
+    idx = _run_append(
+        spark, emb_chunks, index_root, checkpoint, "incremental_ivf_assign",
+        [(
+            "postings",
+            "centroid_id int, vec_id long, label int",
+            lambda b: b.select(
+                _ivf_assign_col("embedding").alias("centroid_id"), "vec_id", "label"
+            ),
+        )],
+        _Side("lists", "centroid_id int, n_list long", "centroid_id",
+              {"n_list": F.lit(1)}),
     )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(index_root, batch_id)
-        sess = batch_df.sparkSession
-        batch_posts = batch_df.select(
-            _ivf_assign_col("embedding").alias("centroid_id"),
-            "vec_id",
-            "label",
-        )
-        batch_sizes = batch_posts.groupBy("centroid_id").agg(
-            F.count(F.lit(1)).cast("long").alias("d_n")
-        )
-        prior = _snapshot_versions(index_root, below=batch_id)
-        if prior:
-            vdir = os.path.join(index_root, f"v{max(prior)}")
-            posts_prev = sess.read.parquet(os.path.join(vdir, "postings"))
-            sizes_prev = sess.read.parquet(os.path.join(vdir, "lists"))
-            posts_new = posts_prev.unionByName(batch_posts)
-            sizes_new = sizes_prev.join(
-                batch_sizes, ["centroid_id"], "full"
-            ).select(
-                "centroid_id",
-                (
-                    F.coalesce("n_list", F.lit(0))
-                    + F.coalesce("d_n", F.lit(0))
-                ).cast("long").alias("n_list"),
-            )
-        else:
-            posts_new = batch_posts
-            sizes_new = batch_sizes.select(
-                "centroid_id", F.col("d_n").alias("n_list")
-            )
-        out = os.path.join(index_root, f"v{batch_id}")
-        posts_new.write.mode("overwrite").parquet(
-            os.path.join(out, "postings")
-        )
-        sizes_new.write.mode("overwrite").parquet(os.path.join(out, "lists"))
-        _prune_snapshots(index_root, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q, "incremental_ivf_assign")
-    versions = _snapshot_versions(index_root)
-    if not versions:
-        return spark.createDataFrame(
-            [], "centroid_id int, vec_id long, label int, n_list long"
-        )
-    vdir = os.path.join(index_root, f"v{max(versions)}")
-    posts = spark.read.parquet(os.path.join(vdir, "postings"))
-    sizes = spark.read.parquet(os.path.join(vdir, "lists"))
-    return posts.join(sizes, "centroid_id").select(
+    return idx["postings"].join(idx["lists"], "centroid_id").select(
         "centroid_id", "vec_id", "label", "n_list"
     )
 
@@ -1032,67 +959,36 @@ def run_incremental_pq_codes(
     cross-row state exists to recount. Each snapshot is written
     ``partitionBy(centroid_id)`` exactly like the batch layout, so a
     probe against the maintained index keeps its dynamic-partition-
-    pruned one-directory scan. Commit-then-swap as ``v{batch_id}``
-    (restart-safe, crash-idempotent); at 100 TB the rewrite becomes
-    per-touched-centroid directory appends — the partition layout
-    below is precisely what makes that incremental path possible.
+    pruned one-directory scan. SNAPSHOT layout as ``v{batch_id}/codes``
+    (restart-safe, crash-idempotent, O(index) per batch); at 100 TB the
+    rewrite becomes per-touched-centroid directory appends — the
+    partition layout is precisely what makes that incremental path
+    possible.
     """
-    import os
-
     from hadoop_cs4225_spark.operators.pq import N_SUB, _code_col
     from hadoop_cs4225_spark.operators.similarity import _ivf_assign_col
 
-    schema = spark.read.parquet(emb_chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(emb_chunks)
-    )
+    def merge(batch_df: DataFrame, prev: DataFrame) -> DataFrame:
+        return prev.unionByName(
+            batch_df.select(
+                "vec_id",
+                "label",
+                "embedding",
+                _ivf_assign_col("embedding").alias("centroid_id"),
+                *[_code_col("embedding", m).alias(f"c{m}") for m in range(N_SUB)],
+            )
+        )
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(index_root, batch_id)
-        sess = batch_df.sparkSession
-        batch_rows = batch_df.select(
-            "vec_id",
-            "label",
-            "embedding",
-            _ivf_assign_col("embedding").alias("centroid_id"),
-            *[_code_col("embedding", m).alias(f"c{m}") for m in range(N_SUB)],
-        )
-        prior = _snapshot_versions(index_root, below=batch_id)
-        if prior:
-            vdir = os.path.join(index_root, f"v{max(prior)}")
-            rows_new = sess.read.parquet(
-                os.path.join(vdir, "codes")
-            ).unionByName(batch_rows)
-        else:
-            rows_new = batch_rows
-        out = os.path.join(index_root, f"v{batch_id}")
-        (
-            rows_new.repartition("centroid_id")
-            .write.mode("overwrite")
-            .partitionBy("centroid_id")
-            .parquet(os.path.join(out, "codes"))
-        )
-        _prune_snapshots(index_root, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    # Partition columns read back last.
+    ddl = (
+        "vec_id long, label int, embedding array<float>, "
+        + "".join(f"c{m} int, " for m in range(N_SUB))
+        + "centroid_id int"
     )
-    _await_bounded(q, "incremental_pq_codes")
-    versions = _snapshot_versions(index_root)
-    if not versions:
-        return spark.createDataFrame(
-            [],
-            "vec_id long, label int, embedding array<double>, "
-            "centroid_id int, "
-            + ", ".join(f"c{m} int" for m in range(N_SUB)),
-        )
-    vdir = os.path.join(index_root, f"v{max(versions)}")
-    return spark.read.parquet(os.path.join(vdir, "codes"))
+    return _run_snapshot(
+        spark, emb_chunks, index_root, checkpoint, "incremental_pq_codes",
+        ddl, merge, part="codes", partition_by="centroid_id",
+    )
 
 
 def run_incremental_byte_shingles(
@@ -1106,61 +1002,27 @@ def run_incremental_byte_shingles(
     DOCUMENT-LOCAL (the set is the doc's own distinct windows; the
     signature is a fold over that set), so the merge algebra is pure
     append: each micro-batch of NEW documents is windowed with the
-    shared :func:`_byte_shingle_sets` and signed with the shared
-    :func:`_byte_sigs_from_sets` — identical definitions to the batch
-    build — and appended to ``sets/`` and ``sigs/``. Commit-then-swap
-    as ``v{batch_id}`` (restart-safe, crash-idempotent); at 100 TB the
-    snapshot rewrite becomes per-batch file appends (immutable docs,
-    no cross-document state). Returns the latest ``sets`` part;
-    ``sigs`` sits next to it and is pinned equal to
-    ``_byte_sigs_from_sets(sets)`` in tests."""
-    import os
-
+    shared :func:`_byte_shingle_sets` into ``v{b}/sets`` and signed
+    with the shared :func:`_byte_sigs_from_sets` over that part read
+    back into ``v{b}/sigs`` — identical definitions to the batch build
+    (APPEND layout, no side table; see :func:`_run_append`). Returns
+    the union of the committed ``sets`` parts; the ``sigs`` parts sit
+    next to them and are pinned equal to ``_byte_sigs_from_sets(sets)``
+    in tests."""
+    from hadoop_cs4225_spark.operators.dedup import N_PERMS
     from hadoop_cs4225_spark.operators.multimodal_ops import (
         _byte_shingle_sets,
         _byte_sigs_from_sets,
     )
 
-    schema = spark.read.parquet(docs_chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_chunks)
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(index_root, batch_id)
-        sess = batch_df.sparkSession
-        batch_sets = _byte_shingle_sets(batch_df)
-        batch_sigs = _byte_sigs_from_sets(batch_sets)
-        prior = _snapshot_versions(index_root, below=batch_id)
-        if prior:
-            vdir = os.path.join(index_root, f"v{max(prior)}")
-            sets_new = sess.read.parquet(
-                os.path.join(vdir, "sets")
-            ).unionByName(batch_sets)
-            sigs_new = sess.read.parquet(
-                os.path.join(vdir, "sigs")
-            ).unionByName(batch_sigs)
-        else:
-            sets_new, sigs_new = batch_sets, batch_sigs
-        out = os.path.join(index_root, f"v{batch_id}")
-        sets_new.write.mode("overwrite").parquet(os.path.join(out, "sets"))
-        sigs_new.write.mode("overwrite").parquet(os.path.join(out, "sigs"))
-        _prune_snapshots(index_root, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q, "incremental_byte_shingles")
-    versions = _snapshot_versions(index_root)
-    if not versions:
-        return spark.createDataFrame([], "doc_id long, sh array<string>")
-    vdir = os.path.join(index_root, f"v{max(versions)}")
-    return spark.read.parquet(os.path.join(vdir, "sets"))
+    sigs_ddl = "doc_id long" + "".join(f", bmh{i} long" for i in range(N_PERMS))
+    return _run_append(
+        spark, docs_chunks, index_root, checkpoint, "incremental_byte_shingles",
+        [
+            ("sets", "doc_id long, sh array<string>", _byte_shingle_sets),
+            ("sigs", sigs_ddl, _byte_sigs_from_sets),
+        ],
+    )["sets"]
 
 
 def run_incremental_ngram5_postings(
@@ -1168,74 +1030,23 @@ def run_incremental_ngram5_postings(
 ) -> DataFrame:
     """Incremental maintenance of the 5-GRAM POSTINGS index — the
     streaming twin of :func:`operators.text_analysis.
-    ensure_ngram5_postings` (r14, VERDICT r13 task 5). Same two-part
-    merge algebra as :func:`run_incremental_shingle_postings` (the
-    3-gram twin): ``posts/`` rows ``(doc_id, source, sh)`` are
-    document-local and append-only; the ``df/`` side table recounts
-    only the batch's shingles (full-outer merge; untouched shingles
-    pass through). The shared :func:`operators.text_analysis.
-    _ngram5_rows` keeps batch and twin on one definition.
-    Commit-then-swap as ``v{batch_id}``; returns the joined
-    ``(doc_id, source, sh, df)`` frame matching the batch layout."""
-    import os
-
+    ensure_ngram5_postings` (r14, VERDICT r13 task 5). Same APPEND
+    layout as :func:`run_incremental_shingle_postings` (the 3-gram
+    twin): ``v{b}/posts/`` holds batch ``b``'s document-local rows
+    ``(doc_id, source, sh)``; the ``v{b}/df/`` side table is the
+    previous one plus the batch posts' per-shingle counts (untouched
+    shingles pass through). The shared :func:`operators.text_analysis.
+    _ngram5_rows` keeps batch and twin on one definition. Returns the
+    joined ``(doc_id, source, sh, df)`` frame matching the batch
+    layout."""
     from hadoop_cs4225_spark.operators.text_analysis import _ngram5_rows
 
-    schema = spark.read.parquet(docs_chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_chunks)
+    idx = _run_append(
+        spark, docs_chunks, index_root, checkpoint, "incremental_ngram5_postings",
+        [("posts", "doc_id long, source string, sh string", _ngram5_rows)],
+        _Side("df", "sh string, df long", "sh", {"df": F.lit(1)}),
     )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(index_root, batch_id)
-        sess = batch_df.sparkSession
-        batch_posts = _ngram5_rows(batch_df)
-        batch_dfc = batch_posts.groupBy("sh").agg(
-            F.count(F.lit(1)).cast("long").alias("d_df")
-        )
-        prior = _snapshot_versions(index_root, below=batch_id)
-        if prior:
-            vdir = os.path.join(index_root, f"v{max(prior)}")
-            posts_new = sess.read.parquet(
-                os.path.join(vdir, "posts")
-            ).unionByName(batch_posts)
-            df_new = (
-                sess.read.parquet(os.path.join(vdir, "df"))
-                .join(batch_dfc, ["sh"], "full")
-                .select(
-                    "sh",
-                    (
-                        F.coalesce("df", F.lit(0))
-                        + F.coalesce("d_df", F.lit(0))
-                    ).cast("long").alias("df"),
-                )
-            )
-        else:
-            posts_new = batch_posts
-            df_new = batch_dfc.select("sh", F.col("d_df").alias("df"))
-        out = os.path.join(index_root, f"v{batch_id}")
-        posts_new.write.mode("overwrite").parquet(os.path.join(out, "posts"))
-        df_new.write.mode("overwrite").parquet(os.path.join(out, "df"))
-        _prune_snapshots(index_root, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q, "incremental_ngram5_postings")
-    versions = _snapshot_versions(index_root)
-    if not versions:
-        return spark.createDataFrame(
-            [], "doc_id long, source string, sh string, df long"
-        )
-    vdir = os.path.join(index_root, f"v{max(versions)}")
-    posts = spark.read.parquet(os.path.join(vdir, "posts"))
-    dfs = spark.read.parquet(os.path.join(vdir, "df"))
-    return posts.join(dfs, "sh").select("doc_id", "source", "sh", "df")
+    return idx["posts"].join(idx["df"], "sh").select("doc_id", "source", "sh", "df")
 
 
 def run_incremental_daily_rollup(
@@ -1256,73 +1067,36 @@ def run_incremental_daily_rollup(
     and no watermark is needed for correctness, only for bounding
     re-merge width under late data at scale.
 
-    Returns the final rollup DataFrame (latest version).
+    The previous snapshot is the LATEST version strictly below the
+    batch id, discovered from the sink itself — never from in-process
+    state. Two failure modes this kills: (a) restart from a checkpoint
+    replays the uncommitted batch N in a fresh process; an in-memory
+    "last version" would start at -1 and the replay would overwrite vN
+    with only its own partial, silently dropping every earlier batch's
+    contribution; (b) if a crashed run already wrote vN before the
+    checkpoint commit, reading max(all versions) would merge vN into
+    itself — double-count. max(v < batch_id) is correct in both: the
+    sink is versioned, so replay overwrites vN idempotently from
+    v(N-1)'s committed state.
+
+    Returns the final rollup DataFrame (latest version; empty when no
+    batch ever ran, and unchanged on a rerun over a drained source).
     """
-    import os
 
-    schema = spark.read.parquet(chunks_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunks_path)
-    )
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-
-    def _versions_on_disk(below: int | None = None) -> list[int]:
-        return _snapshot_versions(out_root, below)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(out_root, batch_id)
-        part = batch_df.groupBy(
-            F.to_date("ts").alias("day"), "event_type"
-        ).agg(
+    def merge(batch_df: DataFrame, prev: DataFrame) -> DataFrame:
+        part = batch_df.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("value").alias("total_value"),
         )
-        # The previous snapshot is the LATEST version strictly below
-        # this batch_id, discovered from the sink itself — never from
-        # in-process state. Two failure modes this kills: (a) restart
-        # from a checkpoint replays the uncommitted batch N in a fresh
-        # process; an in-memory "last version" would start at -1 and
-        # the replay would overwrite vN with only its own partial,
-        # silently dropping every earlier batch's contribution; (b) if
-        # a crashed run already wrote vN before the checkpoint commit,
-        # reading max(all versions) would merge vN into itself —
-        # double-count. max(v < batch_id) is correct in both: the sink
-        # is versioned, so replay overwrites vN idempotently from
-        # v(N-1)'s committed state.
-        prior = _versions_on_disk(below=batch_id)
-        if prior:
-            prev = batch_df.sparkSession.read.parquet(
-                os.path.join(out_root, f"v{max(prior)}")
-            )
-            part = prev.unionByName(part)
-        merged = part.groupBy("day", "event_type").agg(
+        return prev.unionByName(part).groupBy("day", "event_type").agg(
             F.sum("n_events").alias("n_events"),
             F.sum("total_value").alias("total_value"),
         )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(out_root, f"v{batch_id}")
-        )
-        _prune_snapshots(out_root, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_snapshot(
+        spark, chunks_path, out_root, checkpoint, "incremental_daily_rollup",
+        "day date, event_type string, n_events bigint, total_value double", merge,
     )
-    _await_bounded(q, "incremental_daily_rollup")
-    # No new files this run (e.g. a rerun against a drained source) —
-    # fall back to the latest committed snapshot; empty rollup if none.
-    versions = _versions_on_disk()
-    if not versions:
-        return spark.createDataFrame(
-            [], "day date, event_type string, n_events bigint, total_value double"
-        )
-    return spark.read.parquet(os.path.join(out_root, f"v{max(versions)}"))
-
 
 def cusum_fold(s_scaled: int, devs: list[int]) -> int:
     """Pure one-sided-CUSUM transition: fold ``S = max(0, S + dev)``
@@ -1447,42 +1221,13 @@ def run_incremental_countsketch(
 
     Returns the final cell table (d, bucket, cell).
     """
-    import os
 
-    schema = spark.read.parquet(chunks_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunks_path)
+    def merge(batch_df: DataFrame, prev: DataFrame) -> DataFrame:
+        return prev.unionByName(_countsketch_partial(batch_df)).groupBy(
+            "d", "bucket"
+        ).agg(F.sum("cell").cast("long").alias("cell"))
+
+    return _run_snapshot(
+        spark, chunks_path, out_root, checkpoint, "incremental_countsketch",
+        "d int, bucket bigint, cell bigint", merge,
     )
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(out_root, batch_id)
-        part = _countsketch_partial(batch_df)
-        prior = _snapshot_versions(out_root, below=batch_id)
-        if prior:
-            prev = batch_df.sparkSession.read.parquet(
-                os.path.join(out_root, f"v{max(prior)}")
-            )
-            part = prev.unionByName(part)
-        merged = part.groupBy("d", "bucket").agg(
-            F.sum("cell").cast("long").alias("cell")
-        )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(out_root, f"v{batch_id}")
-        )
-        _prune_snapshots(out_root, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q, "incremental_countsketch")
-    versions = _snapshot_versions(out_root)
-    if not versions:
-        return spark.createDataFrame([], "d int, bucket bigint, cell bigint")
-    return spark.read.parquet(os.path.join(out_root, f"v{max(versions)}"))

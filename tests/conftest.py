@@ -92,3 +92,23 @@ def assert_frames_match(spark_df, duck_rel, name=""):
         (a, b) for a, b in zip(sp_sorted, du_sorted) if a != b
     ][:5]
     assert sp_sorted == du_sorted, f"{name}: value mismatch, first diffs: {mismatches}"
+
+
+def part_files(index_root, version, part):
+    """``{file: mtime_ns}`` of one part directory of a versioned sink."""
+    import os
+
+    d = os.path.join(index_root, f"v{version}", part)
+    return {f: os.stat(os.path.join(d, f)).st_mtime_ns for f in os.listdir(d)}
+
+
+def assert_append_part(spark, index_root, part, want, v0_files):
+    """APPEND-layout contract after two batches: ``v1/<part>`` holds
+    exactly batch 1's rows, and ``v0/<part>``'s files were not
+    rewritten by batch 1."""
+    import os
+
+    got = spark.read.parquet(os.path.join(index_root, "v1", part))
+    key = lambda df: sorted(tuple(str(v) for v in r) for r in df.collect())
+    assert key(got) == key(want.select(*got.columns))
+    assert part_files(index_root, 0, part) == v0_files

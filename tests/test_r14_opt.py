@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hadoop_cs4225_spark import registry
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, assert_append_part, part_files
 
 registry.load_all()
 
@@ -164,13 +164,12 @@ def test_incremental_byte_shingles_matches_batch(spark, tmp_path):
     got = streams.run_incremental_byte_shingles(spark, chunks, index_root, ckpt)
     norm = lambda df: _rows(df.select("doc_id", F.array_sort("sh").alias("sh")))
     assert norm(got) == norm(byte_shingle_sets_frame(spark, SF_SMOKE))
-    # the sigs part equals both the fold of the twin's sets and the
-    # batch signature layout
-    versions = sorted(
-        int(d[1:]) for d in os.listdir(index_root) if d.startswith("v")
-    )
+    # the sigs parts (one per batch) equal both the fold of the twin's
+    # sets and the batch signature layout
+    versions = sorted(d for d in os.listdir(index_root) if d.startswith("v"))
+    assert len(versions) == 3, versions
     sigs = spark.read.parquet(
-        os.path.join(index_root, f"v{versions[-1]}", "sigs")
+        *[os.path.join(index_root, v, "sigs") for v in versions]
     )
     assert _rows(sigs) == _rows(_byte_sigs_from_sets(got))
     assert _rows(sigs) == _rows(byte_minhash_sigs_frame(spark, SF_SMOKE))
@@ -227,12 +226,16 @@ def test_incremental_ngram5_growth_is_o_batch(spark, tmp_path):
     df1 = {
         r["sh"]: r["df"] for r in idx1.select("sh", "df").distinct().collect()
     }
+    v0_files = part_files(index_root, 0, "posts")
 
     second.repartition(1).write.mode("append").parquet(chunks)
     idx2 = streams.run_incremental_ngram5_postings(
         spark, chunks, index_root, ckpt
     )
     assert idx2.count() == n1 + _ngram5_rows(second).count()
+    assert_append_part(
+        spark, index_root, "posts", _ngram5_rows(second), v0_files
+    )
     touched = {r["sh"] for r in _ngram5_rows(second).select("sh").distinct().collect()}
     df2 = {
         r["sh"]: r["df"] for r in idx2.select("sh", "df").distinct().collect()

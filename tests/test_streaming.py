@@ -7,7 +7,7 @@ from __future__ import annotations
 from hadoop_cs4225_spark import registry
 from hadoop_cs4225_spark.sources.tables import load_events
 from hadoop_cs4225_spark.streaming import streams
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, assert_append_part, part_files
 
 registry.load_all()
 
@@ -876,6 +876,7 @@ def test_incremental_shingle_postings_growth_is_o_batch(spark, tmp_path):
     )
     n1 = idx1.count()
     df1 = {r["s"]: r["df"] for r in idx1.select("s", "df").distinct().collect()}
+    v0_files = part_files(index_root, 0, "postings")
 
     second.repartition(1).write.mode("append").parquet(chunks)
     idx2 = streams.run_incremental_shingle_postings(
@@ -886,6 +887,13 @@ def test_incremental_shingle_postings_growth_is_o_batch(spark, tmp_path):
         _shingle_sets(second).select(F.explode("sh").alias("s")).count()
     )
     assert n2 == n1 + batch_rows, "postings must grow by the batch's rows"
+    assert_append_part(
+        spark, index_root, "postings",
+        _shingle_sets(second).select(
+            "doc_id", F.explode("sh").alias("s"), F.size("sh").alias("len")
+        ),
+        v0_files,
+    )
     touched = {
         r["s"]
         for r in _shingle_sets(second)
@@ -953,6 +961,7 @@ def test_incremental_ivf_assign_growth_is_o_batch(spark, tmp_path):
     size merge only bumps the touched centroids."""
     from pyspark.sql import functions as F
 
+    from hadoop_cs4225_spark.operators.similarity import _ivf_assign_col
     from hadoop_cs4225_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
@@ -966,10 +975,18 @@ def test_incremental_ivf_assign_growth_is_o_batch(spark, tmp_path):
     idx1 = streams.run_incremental_ivf_assign(spark, chunks, index_root, ckpt)
     n1 = idx1.count()
     assert n1 == first.count()
+    v0_files = part_files(index_root, 0, "postings")
     second.coalesce(1).write.mode("append").parquet(chunks)
     idx2 = streams.run_incremental_ivf_assign(spark, chunks, index_root, ckpt)
     n2 = idx2.count()
     assert n2 == n1 + second.count()
+    assert_append_part(
+        spark, index_root, "postings",
+        second.select(
+            _ivf_assign_col("embedding").alias("centroid_id"), "vec_id", "label"
+        ),
+        v0_files,
+    )
     total = sum(
         r.n_list
         for r in idx2.select("centroid_id", "n_list").distinct().collect()
@@ -1038,6 +1055,7 @@ def test_incremental_token_counts_growth_is_o_batch(spark, tmp_path):
         spark, chunks, index_root, ckpt
     )
     n1 = idx1.count()
+    v0_files = part_files(index_root, 0, "tf")
     vocab1 = {
         r["word"]: (r["df"], r["cf"])
         for r in idx1.select("word", "df", "cf").distinct().collect()
@@ -1055,6 +1073,13 @@ def test_incremental_token_counts_growth_is_o_batch(spark, tmp_path):
         .count()
     )
     assert n2 == n1 + batch_rows, "tf part must grow by the batch's rows"
+    assert_append_part(
+        spark, index_root, "tf",
+        second.select("doc_id", "source", F.explode(_toks()).alias("word"))
+        .groupBy("doc_id", "source", "word")
+        .agg(F.count(F.lit(1)).alias("tf")),
+        v0_files,
+    )
     touched = {
         r["word"]
         for r in second.select(F.explode(_toks()).alias("word"))
@@ -1109,6 +1134,7 @@ def test_incremental_winnow_fps_growth_is_o_batch(spark, tmp_path):
     first.repartition(1).write.parquet(chunks)
     idx1 = streams.run_incremental_winnow_fps(spark, chunks, index_root, ckpt)
     rows1 = _rows(idx1)
+    v0_files = part_files(index_root, 0, "fps")
 
     second.repartition(1).write.mode("append").parquet(chunks)
     idx2 = streams.run_incremental_winnow_fps(spark, chunks, index_root, ckpt)
@@ -1116,6 +1142,9 @@ def test_incremental_winnow_fps_growth_is_o_batch(spark, tmp_path):
     batch_rows = _rows(_winnow_fp_rows(second))
     assert len(rows2) == len(rows1) + len(batch_rows)
     assert sorted(rows2) == sorted(rows1 + batch_rows)
+    assert_append_part(
+        spark, index_root, "fps", _winnow_fp_rows(second), v0_files
+    )
 
 
 def test_incremental_pq_codes_matches_batch(spark, tmp_path):
@@ -1183,3 +1212,129 @@ def test_incremental_pq_codes_growth_and_partition_layout(spark, tmp_path):
         d for d in os.listdir(codes_dir) if d.startswith("centroid_id=")
     ]
     assert part_dirs, "snapshot must be partitioned by centroid_id"
+
+
+def _jobs_launched(spark, call):
+    """Spark jobs ``call()`` launches: a 1-task probe job under a job
+    group before and after it; the job-id gap minus 1 is the count."""
+    sc = spark.sparkContext
+
+    def probe():
+        sc.setJobGroup("job-count-probe", "job-count probe")
+        sc.parallelize([0], 1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        return max(sc.statusTracker().getJobIdsForGroup("job-count-probe"))
+
+    before = probe()
+    call()
+    return probe() - before - 1
+
+
+def test_steady_maintain_call_job_count(spark, tmp_path):
+    """Per-job cost dominates a small maintain call, so its job count is
+    pinned: a steady token call is the tf write and the vocab merge (two
+    jobs each: shuffle map stage + write), a steady shingle call the
+    postings write (one) and the df merge (two). A schema-inference job
+    or a second tokenize pass creeping back fails this."""
+    from pyspark.sql import functions as F
+
+    from hadoop_cs4225_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents").select(
+        "doc_id", "source", "text"
+    )
+    chunks = str(tmp_path / "chunks")
+    limits = {
+        "token_counts": (streams.run_incremental_token_counts, 4),
+        "shingle_postings": (streams.run_incremental_shingle_postings, 3),
+    }
+    for b in range(3):
+        docs.where(F.col("doc_id") % 3 == b).repartition(1).write.mode(
+            "append"
+        ).parquet(chunks)
+        for name, (fn, limit) in limits.items():
+            root = str(tmp_path / name)
+            n = _jobs_launched(
+                spark, lambda: fn(spark, chunks, root, root + ".ckpt")
+            )
+            if b > 0:  # batch 0 also infers the chunk schema
+                assert n <= limit, (name, b, n)
+
+
+def test_incremental_token_counts_crash_replay(spark, tmp_path):
+    """APPEND-layout crash safety. (a) Batch 1 crashed after writing
+    ``v1/tf`` but before its vocab and checkpoint commit: the rerun
+    replays it, overwriting ``v1/tf`` and re-merging against ``v0``'s
+    vocab, and returns the same index as before. (b) A stray uncommitted
+    ``v2/tf`` never appears in the returned index, and batch 2 later
+    overwrites it."""
+    import os
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from hadoop_cs4225_spark.operators.text_analysis import (
+        token_counts_frame,
+    )
+    from hadoop_cs4225_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents").select(
+        "doc_id", "source", "text"
+    )
+    chunks = str(tmp_path / "chunks")
+    index_root, ckpt = str(tmp_path / "index"), str(tmp_path / "ckpt")
+    for b in range(2):
+        docs.where(F.col("doc_id") % 3 == b).repartition(1).write.mode(
+            "append"
+        ).parquet(chunks)
+    before = _rows(
+        streams.run_incremental_token_counts(spark, chunks, index_root, ckpt)
+    )
+
+    shutil.rmtree(os.path.join(index_root, "v1", "vocab"))
+    for f in ("1", ".1.crc"):  # the commit and its checksum
+        os.remove(os.path.join(ckpt, "commits", f))
+    assert streams._committed(index_root, "vocab") == [0]
+    got = streams.run_incremental_token_counts(spark, chunks, index_root, ckpt)
+    assert _rows(got) == before
+    assert streams._committed(index_root, "vocab") == [0, 1]
+
+    shutil.copytree(
+        os.path.join(index_root, "v1", "tf"),
+        os.path.join(index_root, "v2", "tf"),
+    )
+    got = streams.run_incremental_token_counts(spark, chunks, index_root, ckpt)
+    assert _rows(got) == before
+
+    docs.where(F.col("doc_id") % 3 == 2).repartition(1).write.mode(
+        "append"
+    ).parquet(chunks)
+    got = streams.run_incremental_token_counts(spark, chunks, index_root, ckpt)
+    assert _rows(got.select("doc_id", "source", "word", "tf")) == _rows(
+        token_counts_frame(spark, SF_SMOKE)
+    )
+
+
+def test_perfbench_stream_maintain_tiny_is_correct():
+    """The benchmark's stream workload at sf0.001 checks the maintained
+    indexes against the batch-built layouts; it must report
+    ``correct: true``."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run(
+        [
+            sys.executable, "perfbench/run.py", "--workload", "stream_maintain",
+            "--tiny", "--seed", "1", "--seconds", "1",
+        ],
+        cwd=root,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    out = json.loads(res.stdout.strip().splitlines()[-1])
+    assert out["correct"] is True and out["failed"] == 0, out
