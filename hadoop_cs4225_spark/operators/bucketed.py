@@ -12,7 +12,7 @@ the table-design answer, where ``salted_join``/AQE are the query-time
 answers.
 
 The bucketed copies live under ``.derived/<sf>/bucketed_*`` (rebuilt on
-demand, mtime-guarded like the partitioned events layout) and are
+demand, fingerprint-guarded like every derived layout) and are
 registered in the session catalog per scale factor; a fresh session
 re-registers the existing files via ``CREATE TABLE ... CLUSTERED BY ...
 LOCATION`` without rewriting — bucket ids are encoded in the file names,
@@ -33,9 +33,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoop_cs4225_spark.operators.partitioned import _DERIVED_ROOT
 from hadoop_cs4225_spark.registry import register
-from hadoop_cs4225_spark.sources.sinks import derived_is_fresh
+from hadoop_cs4225_spark.sources.sinks import derived_layout
 from hadoop_cs4225_spark.sources.tables import load_table
 
 N_BUCKETS = 8
@@ -49,40 +48,45 @@ def _table_name(table: str, sf_dir: str) -> str:
     return f"bkt_{table}_{tag}"
 
 
-def ensure_bucketed(spark: SparkSession, sf_dir: str, table: str, key: str) -> str:
-    """Materialize (or re-register) the bucketed copy of ``table``;
-    returns the catalog table name."""
-    name = _table_name(table, sf_dir)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(_DERIVED_ROOT, tag, f"bucketed_{table}")
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    spec_path = os.path.join(path, ".bucketspec")
-    spec = f"{N_BUCKETS}:{key}"
-    # Freshness must cover the BUCKET SPEC, not just source mtimes: the
-    # bucket id→file mapping is baked into the file names, so
-    # re-registering surviving files under a different N_BUCKETS/key
-    # would give the co-located join a hash mapping the files don't
-    # satisfy — silently wrong join rows, with the Exchange still
-    # eliminated. A spec marker mismatch forces a rewrite.
-    fresh = derived_is_fresh(os.path.join(path, "_SUCCESS"), src) and (
-        os.path.exists(spec_path)
-        and open(spec_path).read().strip() == spec
-    )
-    if spark.catalog.tableExists(name):
-        if fresh:
-            return name
+def _writer(table: str, key: str):
+    """Build body of the bucketed copy of ``table``. The bucket spec is
+    part of the layout's fingerprint: the bucket id→file mapping is
+    baked into the file names, so re-registering surviving files under
+    a different N_BUCKETS/key would give the co-located join a hash
+    mapping the files don't satisfy — silently wrong join rows, with
+    the Exchange still eliminated."""
+
+    def build(spark: SparkSession, sf_dir: str, path: str) -> None:
+        name = _table_name(table, sf_dir)
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-    if not fresh:
         (
             load_table(spark, sf_dir, table)
             .write.bucketBy(N_BUCKETS, key)
             .sortBy(key)
             .option("path", path)
-            .mode("overwrite")
             .saveAsTable(name)
         )
-        with open(spec_path, "w") as f:
-            f.write(spec)
+
+    return build
+
+
+#: table -> ensure(spark, sf_dir) of its bucketed layout.
+_ENSURE = {
+    t: derived_layout(
+        f"bucketed_{t}", sources=(t,), config=f"buckets={N_BUCKETS};key={k}"
+    )(_writer(t, k))
+    for t, k in _BUCKETED
+}
+
+
+def ensure_bucketed(spark: SparkSession, sf_dir: str, table: str, key: str) -> str:
+    """Materialize (or re-register) the bucketed copy of ``table``;
+    returns the catalog table name. ``key`` must be the declared bucket
+    key of ``table`` (see ``_BUCKETED``)."""
+    assert (table, key) in _BUCKETED, (table, key)
+    name = _table_name(table, sf_dir)
+    path = _ENSURE[table](spark, sf_dir)
+    if spark.catalog.tableExists(name):
         return name
     # Files are fresh but this session's catalog has no entry (new
     # SparkSession over an existing .derived) — metadata-only register.

@@ -27,8 +27,9 @@ from hadoop_cs4225_spark.functions.hashing import (
     hash60_sql,
 )
 from hadoop_cs4225_spark.functions.numeric import quant, quant_sql
+from hadoop_cs4225_spark.operators.wordcount import TOKEN_DELIM_RE
 from hadoop_cs4225_spark.registry import register
-from hadoop_cs4225_spark.sources.sinks import read_derived
+from hadoop_cs4225_spark.sources.sinks import derived_layout, read_derived
 from hadoop_cs4225_spark.sources.tables import load_table
 
 _TOKS_SQL = "list_filter(string_split_regex(text, '[ \\t\\n\\r\\f]+'), x -> x <> '')"
@@ -42,8 +43,8 @@ _TOKS_SQL = "list_filter(string_split_regex(text, '[ \\t\\n\\r\\f]+'), x -> x <>
 #: pair/doc (bounded), keyed by Spark applicationId so a fresh session
 #: never sees another session's checkpointed RDDs, and by the source
 #: parquet's mtime so in-session regeneration of the testdata
-#: auto-invalidates (same discipline as partitioned.py's
-#: ``derived_is_fresh``). On a real cluster the same role is played
+#: auto-invalidates (same discipline as the derived layouts'
+#: ``sinks.ensure``). On a real cluster the same role is played
 #: by writing the pairs/labels tables once and reading them downstream.
 _MATERIALIZED: dict[tuple[str, str, str, float], DataFrame] = {}
 
@@ -182,8 +183,6 @@ def src_no_col() -> Column:
 
 
 def _toks() -> Column:
-    from hadoop_cs4225_spark.operators.wordcount import TOKEN_DELIM_RE
-
     return F.filter(F.split(F.col("text"), TOKEN_DELIM_RE), lambda x: x != "")
 
 
@@ -406,8 +405,13 @@ def minhash_lsh_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ensure_minhash_sig_index(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the MinHash SIGNATURE INDEX as a written table
+@derived_layout(
+    "documents_minhash_sigs",
+    config=f"n_perms={N_PERMS};perm_mod={_PERM_MOD}",
+    upstream=("documents_shingle_postings",),
+)
+def ensure_minhash_sig_index(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The MinHash SIGNATURE INDEX as a written table
     (``.derived/<sf>/documents_minhash_sigs``): one row per eligible
     doc, columns ``doc_id, mh0..mh{N_PERMS-1}`` — the dedup twin of
     :func:`pq.ensure_ivf_pq_index` (VERDICT r10 task 6). At 100 TB the
@@ -416,59 +420,27 @@ def ensure_minhash_sig_index(spark: SparkSession, sf_dir: str) -> str:
     every LSH probe/band query reads, instead of re-hashing every
     shingle per session; incremental ingest appends to it
     (``streaming.run_incremental_corpus_dedup`` maintains the same
-    signature schema per micro-batch). mtime-guarded on
-    documents.parquet via the shared ``.derived`` helpers, AND on the
-    signature DEFINITION fingerprint (ADVICE r11): a change to N_PERMS,
-    the permutation modulus, the shingle width, or the tokenizer regex
-    rebuilds the index automatically — otherwise the Spark side would
+    signature schema per micro-batch). Its fingerprint covers N_PERMS
+    and the permutation modulus, plus the shingle definition through
+    the upstream fold (ADVICE r11/r12): otherwise the Spark side would
     silently consume stale signatures while the DuckDB oracle
-    recomputes inline, a latent parity divergence."""
-    from hadoop_cs4225_spark.sources.sinks import (
-        derived_path,
-        derived_stale,
-        write_derived_config,
-    )
+    recomputes inline, a latent parity divergence.
 
-    cfg = _sig_index_config()
-    path = derived_path(sf_dir, "documents_minhash_sigs")
-    if derived_stale(path, sf_dir, table="documents", config=cfg):
-        # Build FROM the written shingle-set layout (one tokenize pass
-        # per corpus snapshot serves both indexes); MIN is
-        # duplicate-insensitive so signatures over the distinct set
-        # equal signature_frame()'s — pinned in tests.
-        _minhash_sigs_from_exploded(
-            shingle_postings_frame(spark, sf_dir)
-        ).write.mode("overwrite").parquet(path)
-        write_derived_config(path, cfg)
-    return path
-
-
-def _postings_config() -> str:
-    """Definition fingerprint of the stats-bearing postings layout —
-    shared by the postings ensure AND every layout derived from it
-    (the prefix slice), so a rank/stats definition change cascades
-    structurally instead of by hand-synchronized literals."""
-    return _shingle_sets_config() + ";stats=df,len,rn;rank=df,s"
-
-
-def _sig_index_config() -> str:
-    """Definition fingerprint of the on-disk MinHash signature index:
-    every constant that changes what ``signature_frame`` computes.
-    Includes the UPSTREAM shingle-set layout's full fingerprint
-    (ADVICE r12): the signatures are built FROM that layout, so a
-    definition change caught only by the set layout's fingerprint
-    (min_toks, distinct eligibility) must cascade into a signature
-    rebuild — otherwise the sig index would silently serve signatures
-    of the old shingle definition while the DuckDB oracle recomputes
-    inline."""
-    return (
-        f"n_perms={N_PERMS};perm_mod={_PERM_MOD};"
-        f"sets=[{_shingle_sets_config()}]"
+    Built FROM the written shingle postings (one tokenize pass per
+    corpus snapshot serves both indexes); MIN is duplicate-insensitive
+    so signatures over the distinct set equal signature_frame()'s —
+    pinned in tests."""
+    _minhash_sigs_from_exploded(shingle_postings_frame(spark, sf_dir)).write.parquet(
+        path
     )
 
 
-def ensure_shingle_sets(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the distinct 3-token SHINGLE SET per eligible doc as
+@derived_layout(
+    "documents_shingle_sets",
+    config=f"shingle=3;min_toks=3;distinct=1;delim={TOKEN_DELIM_RE}",
+)
+def ensure_shingle_sets(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The distinct 3-token SHINGLE SET per eligible doc as
     a written layout (``.derived/<sf>/documents_shingle_sets``: one row
     per doc, ``doc_id, sh array<string>``) — the postings artifact of
     the whole set-similarity family (VERDICT r11 task 4).
@@ -485,33 +457,12 @@ def ensure_shingle_sets(spark: SparkSession, sf_dir: str) -> str:
     shapes map-side — ``explode`` for postings joins, the array itself
     for in-row verify intersections — with zero extra shuffle.
 
-    mtime-guarded on documents.parquet AND on the shingle definition
-    fingerprint (shingle width / tokenizer regex / eligibility), the
-    ``_sig_index_config`` discipline. The DuckDB oracles keep
-    recomputing shingles inline: index build and probe are one logical
-    definition, so parity holds by construction.
+    Its fingerprint covers the shingle width, tokenizer regex and
+    eligibility. The DuckDB oracles keep recomputing shingles inline:
+    index build and probe are one logical definition, so parity holds
+    by construction.
     """
-    from hadoop_cs4225_spark.sources.sinks import (
-        derived_path,
-        derived_stale,
-        write_derived_config,
-    )
-
-    cfg = _shingle_sets_config()
-    path = derived_path(sf_dir, "documents_shingle_sets")
-    if derived_stale(path, sf_dir, table="documents", config=cfg):
-        docs = load_table(spark, sf_dir, "documents")
-        _shingle_sets(docs).write.mode("overwrite").parquet(path)
-        write_derived_config(path, cfg)
-    return path
-
-
-def _shingle_sets_config() -> str:
-    """Definition fingerprint of the shingle-set layout: everything
-    that changes what ``_shingle_sets`` computes."""
-    from hadoop_cs4225_spark.operators.wordcount import TOKEN_DELIM_RE
-
-    return f"shingle=3;min_toks=3;distinct=1;delim={TOKEN_DELIM_RE}"
+    _shingle_sets(load_table(spark, sf_dir, "documents")).write.parquet(path)
 
 
 def shingle_sets_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -520,8 +471,13 @@ def shingle_sets_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_derived(spark, ensure_shingle_sets(spark, sf_dir))
 
 
-def ensure_shingle_postings(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the statistics-bearing INVERTED INDEX over the
+@derived_layout(
+    "documents_shingle_postings",
+    config="stats=df,len,rn;rank=df,s",
+    upstream=("documents_shingle_sets",),
+)
+def ensure_shingle_postings(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The statistics-bearing INVERTED INDEX over the
     shingle sets (``.derived/<sf>/documents_shingle_postings``): one
     row per (doc, distinct shingle) carrying
 
@@ -540,34 +496,22 @@ def ensure_shingle_postings(spark: SparkSession, sf_dir: str) -> str:
     (Jaccard join) into map-side predicates over one written table.
     Consumers that only need ``(doc_id, s)`` read the same layout
     column-pruned. Built FROM the shingle-set layout (no second
-    tokenize pass); same mtime + definition-fingerprint guard.
+    tokenize pass).
     """
-    from hadoop_cs4225_spark.sources.sinks import (
-        derived_path,
-        derived_stale,
-        write_derived_config,
+    sh = shingle_sets_frame(spark, sf_dir).select(
+        "doc_id", F.size("sh").cast("long").alias("len"),
+        F.explode("sh").alias("s"),
     )
-
-    cfg = _postings_config()
-    path = derived_path(sf_dir, "documents_shingle_postings")
-    if derived_stale(path, sf_dir, table="documents", config=cfg):
-        sh = shingle_sets_frame(spark, sf_dir).select(
-            "doc_id", F.size("sh").cast("long").alias("len"),
-            F.explode("sh").alias("s"),
+    dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("df"))
+    wrank = Window.partitionBy("doc_id").orderBy("df", "s")
+    (
+        sh.join(dfreq, "s")
+        .select(
+            "doc_id", "s", "df", "len",
+            F.row_number().over(wrank).alias("rn"),
         )
-        dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("df"))
-        wrank = Window.partitionBy("doc_id").orderBy("df", "s")
-        (
-            sh.join(dfreq, "s")
-            .select(
-                "doc_id", "s", "df", "len",
-                F.row_number().over(wrank).alias("rn"),
-            )
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        write_derived_config(path, cfg)
-    return path
+        .write.parquet(path)
+    )
 
 
 def shingle_postings_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -584,8 +528,25 @@ def shingle_postings_stats_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_derived(spark, ensure_shingle_postings(spark, sf_dir))
 
 
-def ensure_shingle_prefix(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the PRE-TRUNCATED PPJoin prefix slice
+#: Prefix-filtered set-similarity join (PPJoin-style): Jaccard
+#: threshold 3/5, and a hard df cap on candidate-generating prefix
+#: tokens — the LSH_BUCKET_CAP discipline applied to the prefix
+#: index: prefix tokens are each document's RAREST tokens, so the cap
+#: only binds under pathological boilerplate; it is encoded in BOTH
+#: engines, making it part of the operator's semantics rather than a
+#: Spark-side shortcut.
+_PPJ_T_NUM, _PPJ_T_DEN = 3, 5
+_PPJ_DF_CAP = 64
+
+
+@derived_layout(
+    "documents_shingle_prefix",
+    # r13: rn rides along for the positional filter
+    config=f"prefix=t{_PPJ_T_NUM}/{_PPJ_T_DEN};dfcap={_PPJ_DF_CAP};cols=+rn",
+    upstream=("documents_shingle_postings",),
+)
+def ensure_shingle_prefix(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The PRE-TRUNCATED PPJoin prefix slice
     (``.derived/<sf>/documents_shingle_prefix``): only the postings
     rows satisfying ``rn <= len - ceil(t*len) + 1 AND df <= cap`` —
     i.e. exactly the candidate-generating rows of
@@ -595,37 +556,19 @@ def ensure_shingle_prefix(spark: SparkSession, sf_dir: str) -> str:
     layout at query time (whose parquet row groups interleave prefix
     and non-prefix rows, defeating row-group skipping). Built FROM the
     stats layout (no recompute); its fingerprint folds in the postings
-    config AND the (t, df-cap) constants, so either definition moving
-    rebuilds the slice."""
-    from hadoop_cs4225_spark.sources.sinks import (
-        derived_path,
-        derived_stale,
-        write_derived_config,
+    fingerprint AND the (t, df-cap) constants, so either definition
+    moving rebuilds the slice."""
+    p_len = (
+        F.col("len")
+        - F.expr(f"({_PPJ_T_NUM} * len + {_PPJ_T_DEN} - 1) div {_PPJ_T_DEN}")
+        + 1
     )
-
-    cfg = (
-        _postings_config()
-        + f";prefix=t{_PPJ_T_NUM}/{_PPJ_T_DEN};dfcap={_PPJ_DF_CAP}"
-        + ";cols=+rn"  # r13: rn rides along for the positional filter
+    (
+        shingle_postings_stats_frame(spark, sf_dir)
+        .where((F.col("rn") <= p_len) & (F.col("df") <= _PPJ_DF_CAP))
+        .select("doc_id", F.col("s").alias("tok"), "len", "rn")
+        .write.parquet(path)
     )
-    path = derived_path(sf_dir, "documents_shingle_prefix")
-    if derived_stale(path, sf_dir, table="documents", config=cfg):
-        p_len = (
-            F.col("len")
-            - F.expr(
-                f"({_PPJ_T_NUM} * len + {_PPJ_T_DEN} - 1) div {_PPJ_T_DEN}"
-            )
-            + 1
-        )
-        (
-            shingle_postings_stats_frame(spark, sf_dir)
-            .where((F.col("rn") <= p_len) & (F.col("df") <= _PPJ_DF_CAP))
-            .select("doc_id", F.col("s").alias("tok"), "len", "rn")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        write_derived_config(path, cfg)
-    return path
 
 
 def shingle_prefix_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1538,17 +1481,6 @@ def doc_prefix_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Prefix-filtered set-similarity join (PPJoin-style): Jaccard
-#: threshold 3/5, and a hard df cap on candidate-generating prefix
-#: tokens — the LSH_BUCKET_CAP discipline applied to the prefix
-#: index: prefix tokens are each document's RAREST tokens, so the cap
-#: only binds under pathological boilerplate; it is encoded in BOTH
-#: engines, making it part of the operator's semantics rather than a
-#: Spark-side shortcut.
-_PPJ_T_NUM, _PPJ_T_DEN = 3, 5
-_PPJ_DF_CAP = 64
-
-
 @register(
     "jaccard_prefix_filter_pairs",
     oracle=f"""
@@ -2257,8 +2189,11 @@ def simhash60_frame(docs: DataFrame) -> DataFrame:
     )
 
 
-def ensure_simhash_fp_index(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the 60-bit SimHash FINGERPRINT INDEX as a written
+@derived_layout(
+    "documents_simhash60", config=f"bits={_SIMB_BITS};delim={TOKEN_DELIM_RE}"
+)
+def ensure_simhash_fp_index(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The 60-bit SimHash FINGERPRINT INDEX as a written
     table (``.derived/<sf>/documents_simhash60``: one ``(doc_id, f)``
     row per eligible doc) — the SimHash twin of
     :func:`ensure_minhash_sig_index`, and exactly the table
@@ -2266,24 +2201,11 @@ def ensure_simhash_fp_index(spark: SparkSession, sf_dir: str) -> str:
     (minus its absorbed-count bookkeeping). The band join was the
     suite's slowest query (6.9 s at sf0.1) with ~85% of its cost in
     md5-per-token fingerprinting that is pure corpus state; written
-    once per snapshot, every band probe reads 2 longs/doc.
-    mtime-guarded AND definition-fingerprinted (bits / tokenizer)."""
-    from hadoop_cs4225_spark.sources.sinks import (
-        derived_path,
-        derived_stale,
-        write_derived_config,
+    once per snapshot, every band probe reads 2 longs/doc."""
+    docs = load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
     )
-    from hadoop_cs4225_spark.operators.wordcount import TOKEN_DELIM_RE
-
-    cfg = f"bits={_SIMB_BITS};delim={TOKEN_DELIM_RE}"
-    path = derived_path(sf_dir, "documents_simhash60")
-    if derived_stale(path, sf_dir, table="documents", config=cfg):
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-        simhash60_frame(docs).write.mode("overwrite").parquet(path)
-        write_derived_config(path, cfg)
-    return path
+    simhash60_frame(docs).write.parquet(path)
 
 
 def simhash_fp_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2292,38 +2214,23 @@ def simhash_fp_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_derived(spark, ensure_simhash_fp_index(spark, sf_dir))
 
 
-def ensure_winnow_fp_index(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the WINNOWING fingerprint postings as a written
+@derived_layout(
+    "documents_winnow_fps", config=f"w={_WDP_W};shingle=3;delim={TOKEN_DELIM_RE}"
+)
+def ensure_winnow_fp_index(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The WINNOWING fingerprint postings as a written
     table (``.derived/<sf>/documents_winnow_fps``: one
     ``(doc_id, n_sel, fp)`` row per selected window-minimum shingle
     hash per eligible doc) — the MOSS-index twin of
     :func:`ensure_simhash_fp_index`. The O(n*w) per-doc winnowing map
     (hash every 3-shingle, min over every w-window) is pure corpus
     state and dominated ``winnowing_dup_pairs``; written once per
-    snapshot, the pair join reads integers. mtime- and
-    definition-fingerprint-guarded (w / shingle width / tokenizer)."""
-    from hadoop_cs4225_spark.sources.sinks import (
-        derived_path,
-        derived_stale,
-        write_derived_config,
-    )
-    from hadoop_cs4225_spark.operators.wordcount import TOKEN_DELIM_RE
-
-    w = _WDP_W
-    cfg = f"w={w};shingle=3;delim={TOKEN_DELIM_RE}"
-    path = derived_path(sf_dir, "documents_winnow_fps")
-    if derived_stale(path, sf_dir, table="documents", config=cfg):
-        docs = load_table(spark, sf_dir, "documents")
-        # The winnowing map is ~100x the scan cost and the corpus
-        # arrives as one row group: repartition so the build uses
-        # every core (explicit width survives AQE coalescing).
-        (
-            _winnow_fp_rows(docs, spark.sparkContext.defaultParallelism)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        write_derived_config(path, cfg)
-    return path
+    snapshot, the pair join reads integers."""
+    docs = load_table(spark, sf_dir, "documents")
+    # The winnowing map is ~100x the scan cost and the corpus
+    # arrives as one row group: repartition so the build uses
+    # every core (explicit width survives AQE coalescing).
+    _winnow_fp_rows(docs, spark.sparkContext.defaultParallelism).write.parquet(path)
 
 
 def _winnow_fp_rows(docs: DataFrame, parallelism: int | None = None) -> DataFrame:

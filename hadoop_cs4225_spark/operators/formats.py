@@ -31,10 +31,7 @@ from pyspark.sql import functions as F
 
 from hadoop_cs4225_spark.functions.numeric import quant, quant_sql
 from hadoop_cs4225_spark.registry import register
-from hadoop_cs4225_spark.sources.sinks import (
-    derived_path as _derived,
-    derived_stale as _stale,
-)
+from hadoop_cs4225_spark.sources.sinks import derived_layout
 from hadoop_cs4225_spark.sources.tables import load_table
 
 #: Columns exported to text formats (timestamps rendered as strings so
@@ -56,20 +53,22 @@ def _orders_text_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ensure_orders_csv(spark: SparkSession, sf_dir: str) -> str:
-    path = _derived(sf_dir, "orders_csv")
-    if _stale(path, sf_dir):
-        _orders_text_df(spark, sf_dir).write.mode("overwrite").option(
-            "header", True
-        ).csv(path)
-    return path
+#: Fingerprint of every orders text/ORC copy: the exported columns.
+_ORDERS_TEXT_CONFIG = f"cols={_ORDERS_TEXT_SCHEMA}"
 
 
-def ensure_orders_jsonl(spark: SparkSession, sf_dir: str) -> str:
-    path = _derived(sf_dir, "orders_jsonl")
-    if _stale(path, sf_dir):
-        _orders_text_df(spark, sf_dir).write.mode("overwrite").json(path)
-    return path
+@derived_layout(
+    "orders_csv", sources=("orders",), config=_ORDERS_TEXT_CONFIG + ";csv;header=1"
+)
+def ensure_orders_csv(spark: SparkSession, sf_dir: str, path: str) -> None:
+    _orders_text_df(spark, sf_dir).write.option("header", True).csv(path)
+
+
+@derived_layout(
+    "orders_jsonl", sources=("orders",), config=_ORDERS_TEXT_CONFIG + ";jsonl"
+)
+def ensure_orders_jsonl(spark: SparkSession, sf_dir: str, path: str) -> None:
+    _orders_text_df(spark, sf_dir).write.json(path)
 
 
 _ORDERS_ROLLUP_ORACLE = """
@@ -122,11 +121,11 @@ def orders_jsonl_scan_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _orders_rollup(df)
 
 
-def ensure_orders_orc(spark: SparkSession, sf_dir: str) -> str:
-    path = _derived(sf_dir, "orders_orc")
-    if _stale(path, sf_dir):
-        _orders_text_df(spark, sf_dir).write.mode("overwrite").orc(path)
-    return path
+@derived_layout(
+    "orders_orc", sources=("orders",), config=_ORDERS_TEXT_CONFIG + ";orc"
+)
+def ensure_orders_orc(spark: SparkSession, sf_dir: str, path: str) -> None:
+    _orders_text_df(spark, sf_dir).write.orc(path)
 
 
 @register("orders_orc_scan_rollup", oracle=_ORDERS_ROLLUP_ORACLE)
@@ -139,13 +138,13 @@ def orders_orc_scan_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _orders_rollup(spark.read.orc(path))
 
 
-def ensure_orders_xml(spark: SparkSession, sf_dir: str) -> str:
-    path = _derived(sf_dir, "orders_xml")
-    if _stale(path, sf_dir):
-        _orders_text_df(spark, sf_dir).write.mode("overwrite").format(
-            "xml"
-        ).option("rowTag", "order").save(path)
-    return path
+@derived_layout(
+    "orders_xml", sources=("orders",), config=_ORDERS_TEXT_CONFIG + ";xml;rowTag=order"
+)
+def ensure_orders_xml(spark: SparkSession, sf_dir: str, path: str) -> None:
+    _orders_text_df(spark, sf_dir).write.format("xml").option(
+        "rowTag", "order"
+    ).save(path)
 
 
 @register("orders_xml_scan_rollup", oracle=_ORDERS_ROLLUP_ORACLE)
@@ -165,35 +164,22 @@ def orders_xml_scan_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _orders_rollup(df)
 
 
-def ensure_docs_bin(spark: SparkSession, sf_dir: str) -> str:
-    """Derive one ``doc_<id>.bin`` file per document (doc_id < 32) —
+@derived_layout("docs_bin", config="doc_id<32;utf-8")
+def ensure_docs_bin(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """One ``doc_<id>.bin`` file per document (doc_id < 32) —
     the on-disk shape multimodal corpora arrive in (an object store of
     raw media blobs). Driver-side writer is fixture derivation only,
     bounded at 32 tiny files; real pipelines read pre-existing blobs."""
-    path = _derived(sf_dir, "docs_bin")
-    marker = os.path.join(path, ".done")
-    if _stale(path, sf_dir, table="documents", marker=".done"):
-        # Regeneration must start from an EMPTY directory: if the new
-        # corpus has fewer doc_id<32 documents than the stale layout,
-        # leftover doc_*.bin files would inflate the binaryFile scan's
-        # n_files/total_bytes against the oracle.
-        import shutil
-
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-        os.makedirs(path, exist_ok=True)
-        rows = (
-            load_table(spark, sf_dir, "documents")
-            .where(F.col("doc_id") < 32)
-            .select("doc_id", "text")
-            .collect()
-        )
-        for r in rows:
-            with open(os.path.join(path, f"doc_{r['doc_id']:04d}.bin"), "wb") as f:
-                f.write(r["text"].encode("utf-8"))
-        with open(marker, "w") as f:
-            f.write("ok")
-    return path
+    os.makedirs(path)
+    rows = (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("doc_id") < 32)
+        .select("doc_id", "text")
+        .collect()
+    )
+    for r in rows:
+        with open(os.path.join(path, f"doc_{r['doc_id']:04d}.bin"), "wb") as f:
+            f.write(r["text"].encode("utf-8"))
 
 
 @register(
@@ -219,39 +205,35 @@ def binaryfile_docs_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     path = ensure_docs_bin(spark, sf_dir)
     blobs = spark.read.format("binaryFile").load(path)
-    return blobs.where(~F.col("path").endswith(".done")).agg(
+    return blobs.agg(
         F.count(F.lit(1)).alias("n_files"),
         F.sum("length").alias("total_bytes"),
         F.countDistinct(F.md5("content")).alias("n_distinct_blobs"),
     )
 
 
-def ensure_orders_evolved(spark: SparkSession, sf_dir: str) -> str:
+@derived_layout(
+    "orders_evolved",
+    sources=("orders",),
+    config="gen=1:even,3cols;gen=2:odd,+o_orderpriority",
+)
+def ensure_orders_evolved(spark: SparkSession, sf_dir: str, path: str) -> None:
     """Two parquet batches with EVOLVED schemas under one table root:
     batch ``gen=1`` (the early ingest) has only (o_orderkey, o_custkey,
     o_totalprice); batch ``gen=2`` added ``o_orderpriority`` — the way a
     long-lived 100 TB table actually accretes columns. Split point:
-    even/odd o_orderkey (deterministic, engine-portable). A ``.done``
-    marker commits the pair atomically-enough for the mtime guard (two
-    independent _SUCCESS files could be half-stale)."""
-    path = _derived(sf_dir, "orders_evolved")
-    if _stale(path, sf_dir, marker=".done"):
-        base = load_table(spark, sf_dir, "orders")
-        (
-            base.where(F.col("o_orderkey") % 2 == 0)
-            .select("o_orderkey", "o_custkey", "o_totalprice")
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, "gen=1"))
-        )
-        (
-            base.where(F.col("o_orderkey") % 2 == 1)
-            .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, "gen=2"))
-        )
-        with open(os.path.join(path, ".done"), "w"):
-            pass
-    return path
+    even/odd o_orderkey (deterministic, engine-portable)."""
+    base = load_table(spark, sf_dir, "orders")
+    (
+        base.where(F.col("o_orderkey") % 2 == 0)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+        .write.parquet(os.path.join(path, "gen=1"))
+    )
+    (
+        base.where(F.col("o_orderkey") % 2 == 1)
+        .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
+        .write.parquet(os.path.join(path, "gen=2"))
+    )
 
 
 @register(
@@ -304,20 +286,20 @@ def orders_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DIRTY_MOD = 97
 
 
-def ensure_orders_jsonl_dirty(spark: SparkSession, sf_dir: str) -> str:
-    path = _derived(sf_dir, "orders_jsonl_dirty")
-    if _stale(path, sf_dir):
-        base = _orders_text_df(spark, sf_dir)
-        good = base.select(F.to_json(F.struct(*base.columns)).alias("value"))
-        bad = (
-            base.where(F.col("o_orderkey") % _DIRTY_MOD == 0)
-            .select(F.to_json(F.struct(*base.columns)).alias("j"))
-            .select(
-                F.expr("substring(j, 1, length(j) - 5)").alias("value")
-            )
-        )
-        good.unionByName(bad).write.mode("overwrite").text(path)
-    return path
+@derived_layout(
+    "orders_jsonl_dirty",
+    sources=("orders",),
+    config=_ORDERS_TEXT_CONFIG + f";jsonl;corrupt_mod={_DIRTY_MOD};truncate=5",
+)
+def ensure_orders_jsonl_dirty(spark: SparkSession, sf_dir: str, path: str) -> None:
+    base = _orders_text_df(spark, sf_dir)
+    good = base.select(F.to_json(F.struct(*base.columns)).alias("value"))
+    bad = (
+        base.where(F.col("o_orderkey") % _DIRTY_MOD == 0)
+        .select(F.to_json(F.struct(*base.columns)).alias("j"))
+        .select(F.expr("substring(j, 1, length(j) - 5)").alias("value"))
+    )
+    good.unionByName(bad).write.text(path)
 
 
 @register(

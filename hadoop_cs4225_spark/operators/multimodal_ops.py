@@ -17,7 +17,9 @@ from hadoop_cs4225_spark.functions.multimodal import (
     media_from_documents,
 )
 from hadoop_cs4225_spark.functions.numeric import quant, quant_sql
+from hadoop_cs4225_spark.operators.dedup import N_PERMS, _PERM_MOD
 from hadoop_cs4225_spark.registry import register
+from hadoop_cs4225_spark.sources.sinks import derived_layout, read_derived
 from hadoop_cs4225_spark.sources.tables import load_table
 
 
@@ -296,8 +298,6 @@ def _byte_sigs_from_sets(sets: DataFrame) -> DataFrame:
     """4-permutation MinHash signatures ``(doc_id, bmh0..bmh3)`` over
     the distinct byte-shingle sets (MIN is duplicate-insensitive, so
     signatures over the set equal signatures over raw windows)."""
-    from hadoop_cs4225_spark.operators.dedup import N_PERMS, _PERM_MOD
-
     shd = sets.select("doc_id", F.explode("sh").alias("s"))
     x = F.md5("s")
     hs = shd.select(
@@ -314,29 +314,15 @@ def _byte_sigs_from_sets(sets: DataFrame) -> DataFrame:
     )
 
 
-def _byte_sets_config() -> str:
-    """Definition fingerprint of the byte-shingle set layout."""
-    return (
+@derived_layout(
+    "documents_byte_shingles",
+    config=(
         f"bsh_len={_BSH_LEN};stride={_BSH_STRIDE};hex=1;"
         f"min_len={_BSH_LEN};content=encode(text);distinct=1"
-    )
-
-
-def _byte_sigs_config() -> str:
-    """Fingerprint of the byte MinHash signature layout — cascades the
-    upstream set layout's full fingerprint (the ``_sig_index_config``
-    discipline: signatures are built FROM that layout, so a definition
-    change there must rebuild these too)."""
-    from hadoop_cs4225_spark.operators.dedup import N_PERMS, _PERM_MOD
-
-    return (
-        f"n_perms={N_PERMS};perm_mod={_PERM_MOD};"
-        f"sets=[{_byte_sets_config()}]"
-    )
-
-
-def ensure_byte_shingle_sets(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the BYTE-SHINGLE SET layout
+    ),
+)
+def ensure_byte_shingle_sets(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The BYTE-SHINGLE SET layout
     (``.derived/<sf>/documents_byte_shingles``: one row per eligible
     doc, ``doc_id, sh array<string>``) — the multimodal twin of
     ``dedup.ensure_shingle_sets`` (VERDICT r13 task 2).
@@ -344,35 +330,25 @@ def ensure_byte_shingle_sets(spark: SparkSession, sf_dir: str) -> str:
     explode (substring+hex over every payload) re-run per invocation;
     the windows are pure corpus state at byte grain, so they are
     written once per corpus snapshot and every probe reads them.
-    mtime-guarded on documents.parquet AND the definition fingerprint;
-    the DuckDB oracle recomputes the windows inline, so parity verifies
+    The DuckDB oracle recomputes the windows inline, so parity verifies
     the index CONTENT every round. Incrementally maintained by
     ``streaming.run_incremental_byte_shingles`` (documents are
     immutable, so per-doc set rows are append-only)."""
-    from hadoop_cs4225_spark.sources.sinks import (
-        derived_path,
-        derived_stale,
-        write_derived_config,
-    )
-
-    cfg = _byte_sets_config()
-    path = derived_path(sf_dir, "documents_byte_shingles")
-    if derived_stale(path, sf_dir, table="documents", config=cfg):
-        docs = load_table(spark, sf_dir, "documents")
-        _byte_shingle_sets(docs).write.mode("overwrite").parquet(path)
-        write_derived_config(path, cfg)
-    return path
+    _byte_shingle_sets(load_table(spark, sf_dir, "documents")).write.parquet(path)
 
 
 def byte_shingle_sets_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The written byte-shingle set layout (ensure + read)."""
-    from hadoop_cs4225_spark.sources.sinks import read_derived
-
     return read_derived(spark, ensure_byte_shingle_sets(spark, sf_dir))
 
 
-def ensure_byte_minhash_sigs(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the byte-grain MinHash SIGNATURE index
+@derived_layout(
+    "documents_byte_minhash_sigs",
+    config=f"n_perms={N_PERMS};perm_mod={_PERM_MOD}",
+    upstream=("documents_byte_shingles",),
+)
+def ensure_byte_minhash_sigs(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The byte-grain MinHash SIGNATURE index
     (``.derived/<sf>/documents_byte_minhash_sigs``: ``doc_id,
     bmh0..bmh3``) — built FROM the byte-shingle set layout (one window
     explode per corpus snapshot serves both layouts), the byte twin of
@@ -380,32 +356,15 @@ def ensure_byte_minhash_sigs(spark: SparkSession, sf_dir: str) -> str:
     over ~all distinct windows was the query's second irreducible
     per-run cost; signatures are corpus state, so the banded candidate
     generation reads N_PERMS longs per doc instead."""
-    from hadoop_cs4225_spark.sources.sinks import (
-        derived_path,
-        derived_stale,
-        write_derived_config,
-    )
-
-    cfg = _byte_sigs_config()
-    path = derived_path(sf_dir, "documents_byte_minhash_sigs")
-    if derived_stale(path, sf_dir, table="documents", config=cfg):
-        _byte_sigs_from_sets(
-            byte_shingle_sets_frame(spark, sf_dir)
-        ).write.mode("overwrite").parquet(path)
-        write_derived_config(path, cfg)
-    return path
+    _byte_sigs_from_sets(byte_shingle_sets_frame(spark, sf_dir)).write.parquet(path)
 
 
 def byte_minhash_sigs_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The written byte MinHash signature index (ensure + read)."""
-    from hadoop_cs4225_spark.sources.sinks import read_derived
-
     return read_derived(spark, ensure_byte_minhash_sigs(spark, sf_dir))
 
 
 def _bsh_minhash_sql() -> str:
-    from hadoop_cs4225_spark.operators.dedup import N_PERMS, _PERM_MOD
-
     mins = ", ".join(
         f"MIN((h1 + {i} * h2) % {_PERM_MOD}) AS bmh{i}" for i in range(N_PERMS)
     )

@@ -13,43 +13,25 @@ layout is a pure re-organization, not a semantic change.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_cs4225_spark.registry import register
 from hadoop_cs4225_spark.sources.sinks import (
-    derived_is_fresh,
+    derived_layout,
     read_derived,
     write_partitioned,
 )
 from hadoop_cs4225_spark.sources.tables import load_events
 
-#: Compat alias — the single source of truth lives in sources/sinks.py.
-from hadoop_cs4225_spark.sources.sinks import DERIVED_ROOT as _DERIVED_ROOT  # noqa: E402
 
-
-def events_by_day_path(sf_dir: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(_DERIVED_ROOT, tag, "events_by_day")
-
-
-def ensure_events_by_day(spark: SparkSession, sf_dir: str) -> str:
-    """Write the date-partitioned copy of ``events`` if absent.
-
-    Idempotent: a FRESH ``_SUCCESS`` marker (newer than the source
-    parquet) means the layout is complete
-    (Spark writes it last); a partial dir from an interrupted run is
-    overwritten.
-    """
-    path = events_by_day_path(sf_dir)
-    if not derived_is_fresh(
-        os.path.join(path, "_SUCCESS"), os.path.join(sf_dir, "events.parquet")
-    ):
-        ev = load_events(spark, sf_dir).withColumn("event_date", F.to_date("ts"))
-        write_partitioned(ev, path, ("event_date",), mode="overwrite")
-    return path
+@derived_layout(
+    "events_by_day", sources=("events",), config="partition=event_date"
+)
+def ensure_events_by_day(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The date-partitioned copy of ``events``."""
+    ev = load_events(spark, sf_dir).withColumn("event_date", F.to_date("ts"))
+    write_partitioned(ev, path, ("event_date",))
 
 
 @register(
@@ -86,31 +68,22 @@ def events_partition_pruned_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_nested_path(sf_dir: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(_DERIVED_ROOT, tag, "events_nested")
-
-
-def ensure_events_nested(spark: SparkSession, sf_dir: str) -> str:
-    """Write a nested-struct copy of ``events``: everything except the
+@derived_layout(
+    "events_nested", sources=("events",), config="meta=etype,k,value,day"
+)
+def ensure_events_nested(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """A nested-struct copy of ``events``: everything except the
     key folded into ``meta struct<etype,k,value,day>`` — the shape
     event logs arrive in when ingested from JSON at scale."""
-    path = events_nested_path(sf_dir)
-    if not derived_is_fresh(
-        os.path.join(path, "_SUCCESS"), os.path.join(sf_dir, "events.parquet")
-    ):
-        ev = load_events(spark, sf_dir)
-        nested = ev.select(
-            "event_id",
-            F.struct(
-                F.col("event_type").alias("etype"),
-                F.get_json_object("props", "$.k").cast("int").alias("k"),
-                F.col("value").alias("value"),
-                F.to_date("ts").alias("day"),
-            ).alias("meta"),
-        )
-        nested.write.mode("overwrite").parquet(path)
-    return path
+    load_events(spark, sf_dir).select(
+        "event_id",
+        F.struct(
+            F.col("event_type").alias("etype"),
+            F.get_json_object("props", "$.k").cast("int").alias("k"),
+            F.col("value").alias("value"),
+            F.to_date("ts").alias("day"),
+        ).alias("meta"),
+    ).write.parquet(path)
 
 
 @register(
@@ -142,11 +115,6 @@ def nested_struct_pruned_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_zorder_path(sf_dir: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(_DERIVED_ROOT, tag, "events_zorder")
-
-
 def _zvalue() -> F.Column:
     """Morton (Z-order) key interleaving the low 16 bits of ``user_id``
     with the low 16 bits of the day index (days since 2024-01-01):
@@ -161,25 +129,24 @@ def _zvalue() -> F.Column:
     return F.expr(" + ".join(terms))
 
 
-def ensure_events_zorder(spark: SparkSession, sf_dir: str) -> str:
-    """Write a Z-ORDERED copy of ``events``: range-partitioned and
+@derived_layout(
+    "events_zorder",
+    sources=("events",),
+    config="zorder=user_id,day;bits=16;ranges=8",
+)
+def ensure_events_zorder(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """A Z-ORDERED copy of ``events``: range-partitioned and
     sorted by the Morton key of (user_id, day), so each parquet row
     group covers a small rectangle in BOTH dimensions and its min/max
     footer stats are selective for user filters, day filters, and their
     conjunction alike."""
-    path = events_zorder_path(sf_dir)
-    if not derived_is_fresh(
-        os.path.join(path, "_SUCCESS"), os.path.join(sf_dir, "events.parquet")
-    ):
-        ev = load_events(spark, sf_dir).withColumn("zval", _zvalue())
-        (
-            ev.repartitionByRange(8, "zval")
-            .sortWithinPartitions("zval")
-            .drop("zval")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
+    ev = load_events(spark, sf_dir).withColumn("zval", _zvalue())
+    (
+        ev.repartitionByRange(8, "zval")
+        .sortWithinPartitions("zval")
+        .drop("zval")
+        .write.parquet(path)
+    )
 
 
 @register(
@@ -242,27 +209,19 @@ def events_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_by_user_path(sf_dir: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(_DERIVED_ROOT, tag, "events_by_user")
-
-
-def ensure_events_by_user(spark: SparkSession, sf_dir: str) -> str:
-    """Write a user-CLUSTERED copy of ``events``: range-partitioned and
+@derived_layout(
+    "events_by_user", sources=("events",), config="cluster=user_id,ts;ranges=8"
+)
+def ensure_events_by_user(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """A user-CLUSTERED copy of ``events``: range-partitioned and
     sorted by ``user_id``, so every parquet row group covers a narrow
     user range and its min/max footer statistics become effective."""
-    path = events_by_user_path(sf_dir)
-    if not derived_is_fresh(
-        os.path.join(path, "_SUCCESS"), os.path.join(sf_dir, "events.parquet")
-    ):
-        ev = load_events(spark, sf_dir)
-        (
-            ev.repartitionByRange(8, "user_id")
-            .sortWithinPartitions("user_id", "ts")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
+    (
+        load_events(spark, sf_dir)
+        .repartitionByRange(8, "user_id")
+        .sortWithinPartitions("user_id", "ts")
+        .write.parquet(path)
+    )
 
 
 @register(

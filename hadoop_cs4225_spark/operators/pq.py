@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from hadoop_cs4225_spark.functions.numeric import quant, quant_sql
 from hadoop_cs4225_spark.operators.similarity import (
+    CENTROIDS,
     EMB_DIM,
     _cos,
     _cos_sql,
@@ -48,7 +49,7 @@ from hadoop_cs4225_spark.operators.similarity import (
     scores_fold,
 )
 from hadoop_cs4225_spark.registry import register
-from hadoop_cs4225_spark.sources.sinks import read_derived
+from hadoop_cs4225_spark.sources.sinks import derived_layout, read_derived
 from hadoop_cs4225_spark.sources.tables import load_table
 
 #: Subspace geometry: 4 subspaces x 16 dims; 8 codes per subspace.
@@ -386,34 +387,42 @@ def ivf_pq_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ensure_ivf_pq_index(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the IVF-PQ INDEX as a table: embeddings written
+@derived_layout(
+    "embeddings_ivf_pq",
+    sources=("embeddings",),
+    # the coarse centroids and PQ codebooks are constants: digest their values
+    config=(
+        f"n_sub={N_SUB};sub_dim={SUB_DIM};n_codes={N_CODES};"
+        f"n_lists={len(CENTROIDS)};partition=centroid_id;books="
+        + hashlib.md5(repr((CENTROIDS, PQ_CENTS)).encode()).hexdigest()
+    ),
+)
+def ensure_ivf_pq_index(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The IVF-PQ INDEX as a table: embeddings written
     ``partitionBy(centroid_id)`` with their PQ codes as stored columns.
 
     This is the layout the query-time docstrings keep promising — one
     directory per inverted list, codes precomputed at write time so a
     probe neither rescans raw vectors for assignment nor recomputes
-    codes. mtime-guarded via the shared ``.derived`` helpers."""
+    codes. Its fingerprint covers the subspace geometry and a digest of
+    the centroid and codebook values, so a change to any of them
+    rebuilds the index (and, through the fingerprint file's mtime,
+    ``similarity.method_topk_frame``'s memos)."""
     from hadoop_cs4225_spark.operators.similarity import _ivf_assign_col
-    from hadoop_cs4225_spark.sources.sinks import derived_path, derived_stale
 
-    path = derived_path(sf_dir, "embeddings_ivf_pq")
-    if derived_stale(path, sf_dir, table="embeddings"):
-        emb = load_table(spark, sf_dir, "embeddings")
-        (
-            emb.select(
-                "vec_id",
-                "label",
-                "embedding",
-                _ivf_assign_col("embedding").alias("centroid_id"),
-                *[_code_col("embedding", m).alias(f"c{m}") for m in range(N_SUB)],
-            )
-            .repartition("centroid_id")
-            .write.mode("overwrite")
-            .partitionBy("centroid_id")
-            .parquet(path)
+    (
+        load_table(spark, sf_dir, "embeddings")
+        .select(
+            "vec_id",
+            "label",
+            "embedding",
+            _ivf_assign_col("embedding").alias("centroid_id"),
+            *[_code_col("embedding", m).alias(f"c{m}") for m in range(N_SUB)],
         )
-    return path
+        .repartition("centroid_id")
+        .write.partitionBy("centroid_id")
+        .parquet(path)
+    )
 
 
 @register("ivf_pq_index_probe", oracle=_IVF_PQ_ORACLE)

@@ -220,17 +220,15 @@ def method_topk_frame(spark: SparkSession, sf_dir: str, label: str, fn) -> DataF
     import os
 
     from hadoop_cs4225_spark.operators.dedup import _memo
-    from hadoop_cs4225_spark.sources.sinks import derived_path
+    from hadoop_cs4225_spark.sources.sinks import DERIVED_CONFIG, derived_path
 
     # ADVICE r13: the ivf/pq/rerank arms read the written IVF-PQ index,
     # which can be rebuilt IN-SESSION by a definition/config change with
-    # embeddings.parquet untouched — fold the layout's config mtime
-    # (written last by write_derived_config) into the memo key so the
+    # embeddings.parquet untouched — fold the layout's fingerprint mtime
+    # (written last by sinks.ensure) into the memo key so the
     # memoized 5-row result can never outlive the index it was read
     # from.
-    ivf_cfg = os.path.join(
-        derived_path(sf_dir, "embeddings_ivf_pq"), "_DERIVED_CONFIG"
-    )
+    ivf_cfg = os.path.join(derived_path(sf_dir, "embeddings_ivf_pq"), DERIVED_CONFIG)
     return _memo(
         spark,
         sf_dir,

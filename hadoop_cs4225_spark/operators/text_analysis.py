@@ -27,8 +27,9 @@ from hadoop_cs4225_spark.operators.dedup import (
     _lsh_pairs_cte,
     src_no_col,
 )
+from hadoop_cs4225_spark.operators.wordcount import TOKEN_DELIM_RE
 from hadoop_cs4225_spark.registry import register
-from hadoop_cs4225_spark.sources.sinks import read_derived
+from hadoop_cs4225_spark.sources.sinks import derived_layout, read_derived
 from hadoop_cs4225_spark.sources.tables import load_table
 
 #: Marker words per language for the n-gram/stopword language-ID
@@ -47,8 +48,6 @@ QUALITY_STOPWORDS: tuple[str, ...] = ("a", "the", "and", "of", "to", "in", "is",
 
 def _toks(text_col: str = "text") -> Column:
     """Token array with StringTokenizer semantics (no empty tokens)."""
-    from hadoop_cs4225_spark.operators.wordcount import TOKEN_DELIM_RE
-
     return F.filter(F.split(F.col(text_col), TOKEN_DELIM_RE), lambda x: x != "")
 
 
@@ -61,16 +60,12 @@ _TOKS_SQL = "list_filter(string_split_regex(text, '[ \\t\\n\\r\\f]+'), x -> x <>
 # ---------------------------------------------------------------------------
 
 
-def _token_counts_config() -> str:
-    """Definition fingerprint of the token-count layout: everything that
-    changes what the (doc, word) count pass computes."""
-    from hadoop_cs4225_spark.operators.wordcount import TOKEN_DELIM_RE
-
-    return f"grain=doc,word;cols=doc_id,source,word,tf;delim={TOKEN_DELIM_RE}"
-
-
-def ensure_token_counts(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the TOKEN-COUNT INDEX as a written layout
+@derived_layout(
+    "documents_token_counts",
+    config=f"grain=doc,word;cols=doc_id,source,word,tf;delim={TOKEN_DELIM_RE}",
+)
+def ensure_token_counts(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The TOKEN-COUNT INDEX as a written layout
     (``.derived/<sf>/documents_token_counts``): one row per
     (doc, distinct word) carrying ``doc_id, source, word, tf`` — the
     unigram twin of ``dedup.ensure_shingle_postings`` (VERDICT r12
@@ -87,30 +82,17 @@ def ensure_token_counts(spark: SparkSession, sf_dir: str) -> str:
     token stream, and ``source`` rides along dictionary-encoded so
     per-source consumers never re-join ``documents``.
 
-    mtime-guarded on documents.parquet AND the tokenizer-definition
-    fingerprint (the ``_sig_index_config`` discipline). The DuckDB
+    Its fingerprint covers the tokenizer definition. The DuckDB
     oracles keep recomputing token counts inline: index build and
     probe are one logical definition, so parity holds by construction.
     """
-    from hadoop_cs4225_spark.sources.sinks import (
-        derived_path,
-        derived_stale,
-        write_derived_config,
+    (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "source", F.explode(_toks()).alias("word"))
+        .groupBy("doc_id", "source", "word")
+        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
+        .write.parquet(path)
     )
-
-    cfg = _token_counts_config()
-    path = derived_path(sf_dir, "documents_token_counts")
-    if derived_stale(path, sf_dir, table="documents", config=cfg):
-        docs = load_table(spark, sf_dir, "documents")
-        (
-            docs.select("doc_id", "source", F.explode(_toks()).alias("word"))
-            .groupBy("doc_id", "source", "word")
-            .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        write_derived_config(path, cfg)
-    return path
 
 
 def token_counts_frame(
@@ -124,37 +106,26 @@ def token_counts_frame(
     return read_derived(spark, ensure_token_counts(spark, sf_dir)).select(*cols)
 
 
-def ensure_token_df(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the WORD-LEVEL side table
+@derived_layout(
+    "documents_token_df", config="stats=df,cf", upstream=("documents_token_counts",)
+)
+def ensure_token_df(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The WORD-LEVEL side table
     (``.derived/<sf>/documents_token_df``): ``word, df, cf`` — global
     document frequency and corpus frequency per word, built FROM the
     token-count layout (no second tokenize pass; ``df`` is a row count
     because the tf layout is (doc, word)-unique). Vocabulary-sized, so
     pure-vocabulary consumers (Zipf fit, coverage curve, burstiness,
-    TF-IDF's df side) read it with ZERO shuffles. Its fingerprint
-    extends the tf layout's, so an upstream definition change cascades
-    (the ADVICE-r12 sig-index lesson)."""
-    from hadoop_cs4225_spark.sources.sinks import (
-        derived_path,
-        derived_stale,
-        write_derived_config,
-    )
-
-    cfg = _token_counts_config() + ";stats=df,cf"
-    path = derived_path(sf_dir, "documents_token_df")
-    if derived_stale(path, sf_dir, table="documents", config=cfg):
-        (
-            token_counts_frame(spark, sf_dir, ("word", "tf"))
-            .groupBy("word")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("df"),
-                F.sum("tf").cast("long").alias("cf"),
-            )
-            .write.mode("overwrite")
-            .parquet(path)
+    TF-IDF's df side) read it with ZERO shuffles."""
+    (
+        token_counts_frame(spark, sf_dir, ("word", "tf"))
+        .groupBy("word")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("df"),
+            F.sum("tf").cast("long").alias("cf"),
         )
-        write_derived_config(path, cfg)
-    return path
+        .write.parquet(path)
+    )
 
 
 def token_df_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -769,15 +740,12 @@ def _ngram5_rows(docs: DataFrame) -> DataFrame:
     )
 
 
-def _ngram5_config() -> str:
-    """Definition fingerprint of the 5-gram postings layout."""
-    from hadoop_cs4225_spark.operators.wordcount import TOKEN_DELIM_RE
-
-    return f"ngram=5;min_toks=5;distinct=1;delim={TOKEN_DELIM_RE};stats=df;cols=source"
-
-
-def ensure_ngram5_postings(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the 5-GRAM POSTINGS index with document frequency
+@derived_layout(
+    "documents_5gram_postings",
+    config=f"ngram=5;min_toks=5;distinct=1;delim={TOKEN_DELIM_RE};stats=df;cols=source",
+)
+def ensure_ngram5_postings(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The 5-GRAM POSTINGS index with document frequency
     (``.derived/<sf>/documents_5gram_postings``: one row per (doc,
     distinct 5-token shingle) carrying ``doc_id, source, sh, df``) —
     the token-index discipline at 5-gram grain (VERDICT r13 task 5).
@@ -786,32 +754,20 @@ def ensure_ngram5_postings(spark: SparkSession, sf_dir: str) -> str:
     statistic, so it belongs IN the written index (exactly what the
     3-gram ``ensure_shingle_postings`` already stores), and the
     coverage query folds per-doc stats from a column-pruned scan —
-    no explode, no join, no window at query time. mtime-guarded on
-    documents.parquet AND the definition fingerprint; the DuckDB
-    oracle keeps recomputing the 5-grams inline, so parity verifies
-    the index CONTENT every round. Incrementally maintained by
-    ``streaming.run_incremental_ngram5_postings``."""
-    from hadoop_cs4225_spark.sources.sinks import (
-        derived_path,
-        derived_stale,
-        write_derived_config,
-    )
+    no explode, no join, no window at query time. The DuckDB oracle
+    keeps recomputing the 5-grams inline, so parity verifies the index
+    CONTENT every round. Incrementally maintained by
+    ``streaming.run_incremental_ngram5_postings``.
 
-    cfg = _ngram5_config()
-    path = derived_path(sf_dir, "documents_5gram_postings")
-    if derived_stale(path, sf_dir, table="documents", config=cfg):
-        sh = _ngram5_rows(load_table(spark, sf_dir, "documents"))
-        dfreq = sh.groupBy("sh").agg(
-            F.count(F.lit(1)).cast("long").alias("df")
-        )
-        (
-            sh.join(dfreq, "sh")
-            .select("doc_id", "source", "sh", "df")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        write_derived_config(path, cfg)
-    return path
+    The shingle rows feed both the df count and the join probe, so
+    they are persisted for the build: one tokenize + 5-gram explode
+    pass instead of two, freed after the write."""
+    sh = _ngram5_rows(load_table(spark, sf_dir, "documents")).persist()
+    try:
+        dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).cast("long").alias("df"))
+        sh.join(dfreq, "sh").select("doc_id", "source", "sh", "df").write.parquet(path)
+    finally:
+        sh.unpersist()
 
 
 def ngram5_postings_frame(spark: SparkSession, sf_dir: str) -> DataFrame:

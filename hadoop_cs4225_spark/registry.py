@@ -302,81 +302,26 @@ def warm_shared_frames(spark: SparkSession, sf_dir: str) -> dict[str, float]:
 
 
 def warm_derived_layouts(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    """Materialize every mtime-guarded DERIVED LAYOUT (partitioned /
-    bucketed / z-ordered tables, the IVF-PQ index, the dirty JSONL
-    feed) ahead of timing (VERDICT r9 task 6): these are write-once
-    physical designs a cluster deployment builds as a pipeline step,
-    so the bench should measure the PROBE cost of
-    ``ivf_pq_index_probe`` / ``bucketed_segment_revenue`` /
-    the partition-pruning family — not charge whichever query runs
-    first with the one-off layout build. Idempotent (each ensure_* is
-    freshness-guarded on the source parquet mtime). Returns per-layout
-    ensure seconds keyed by layout name, so bench.py can report what
-    the untimed warmup costs (VERDICT r13 task 1; bench.py deletes the
-    sf's ``.derived`` tree first so these are COLD build costs, not
-    freshness checks)."""
+    """Materialize every declared DERIVED LAYOUT (``sinks.LAYOUTS``,
+    walked upstream first) ahead of timing (VERDICT r9 task 6): these
+    are write-once physical designs a cluster deployment builds as a
+    pipeline step, so the bench should measure the PROBE cost of their
+    queries — not charge whichever query runs first with the one-off
+    layout build. Idempotent (each layout is freshness-guarded).
+    Returns per-layout ensure seconds keyed by leaf, so bench.py can
+    report what the untimed warmup costs (VERDICT r13 task 1; bench.py
+    deletes the sf's ``.derived`` tree first so these are COLD build
+    costs, not freshness checks)."""
     import time as _time
 
-    load_all()
-    from hadoop_cs4225_spark.operators.bucketed import (
-        _BUCKETED,
-        ensure_bucketed,
-    )
-    from hadoop_cs4225_spark.operators.dedup import (
-        ensure_minhash_sig_index,
-        ensure_shingle_postings,
-        ensure_shingle_prefix,
-        ensure_shingle_sets,
-        ensure_simhash_fp_index,
-        ensure_winnow_fp_index,
-    )
-    from hadoop_cs4225_spark.operators.formats import (
-        ensure_orders_jsonl_dirty,
-    )
-    from hadoop_cs4225_spark.operators.partitioned import (
-        ensure_events_by_day,
-        ensure_events_by_user,
-        ensure_events_nested,
-        ensure_events_zorder,
-    )
-    from hadoop_cs4225_spark.operators.multimodal_ops import (
-        ensure_byte_minhash_sigs,
-        ensure_byte_shingle_sets,
-    )
-    from hadoop_cs4225_spark.operators.pq import ensure_ivf_pq_index
-    from hadoop_cs4225_spark.operators.text_analysis import (
-        ensure_ngram5_postings,
-        ensure_token_counts,
-        ensure_token_df,
-    )
+    from hadoop_cs4225_spark.sources import sinks
 
+    load_all()
     timings: dict[str, float] = {}
-    for ensure in (
-        ensure_events_by_day,
-        ensure_events_nested,
-        ensure_events_zorder,
-        ensure_events_by_user,
-        ensure_ivf_pq_index,
-        ensure_shingle_sets,  # before the postings/sig index, which read it
-        ensure_shingle_postings,
-        ensure_shingle_prefix,  # built FROM the postings stats layout
-        ensure_minhash_sig_index,
-        ensure_simhash_fp_index,
-        ensure_winnow_fp_index,
-        ensure_token_counts,  # before the df side table, which reads it
-        ensure_token_df,
-        ensure_ngram5_postings,
-        ensure_byte_shingle_sets,  # before the byte sig index (built FROM it)
-        ensure_byte_minhash_sigs,
-        ensure_orders_jsonl_dirty,
-    ):
+    for layout in sinks.walk_layouts():
         t0 = _time.perf_counter()
-        ensure(spark, sf_dir)
-        timings[ensure.__name__] = round(_time.perf_counter() - t0, 3)
-    for t, k in _BUCKETED:
-        t0 = _time.perf_counter()
-        ensure_bucketed(spark, sf_dir, t, k)
-        timings[f"bucketed_{t}"] = round(_time.perf_counter() - t0, 3)
+        sinks.ensure(spark, sf_dir, layout)
+        timings[layout.leaf] = round(_time.perf_counter() - t0, 3)
     return timings
 
 

@@ -9,22 +9,34 @@ exists-check, ``write_text_kv`` the format (TopkCommonWords emits
 Scale: ``write_partitioned`` is the 100 TB layout primitive — partition
 columns become directory pruning keys for every downstream scan
 (e.g. ``events`` by day, ``documents`` by lang/source).
+
+Derived layouts: every write-once ``.derived`` table (indexes, format
+copies, clustered/bucketed copies) is declared once with
+:func:`derived_layout` into :data:`LAYOUTS`, and one generic
+:func:`ensure` owns its path, freshness and commit; warm-ups and probes
+walk the table (:func:`walk_layouts`) instead of keeping lists.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import shutil
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: Repo-local root for derived layouts (gitignored; rebuilt on demand).
-#: Single source of truth — operators import this (directly or via the
-#: ``partitioned._DERIVED_ROOT`` alias) rather than re-deriving it.
 DERIVED_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
     ".derived",
 )
+
+#: The single commit marker of every derived layout: its definition
+#: fingerprint, written after the data (see :func:`ensure`).
+DERIVED_CONFIG = "_DERIVED_CONFIG"
 
 
 def derived_path(sf_dir: str, leaf: str) -> str:
@@ -33,82 +45,130 @@ def derived_path(sf_dir: str, leaf: str) -> str:
     return os.path.join(DERIVED_ROOT, tag, leaf)
 
 
-def derived_stale(
-    path: str,
-    sf_dir: str,
-    table: str = "orders",
-    marker: str = "_SUCCESS",
-    config: str | None = None,
-) -> bool:
-    """Derived copy missing OR older than its source parquet (the driver
-    regenerates testdata between rounds; see :func:`derived_is_fresh`).
+@dataclass(frozen=True)
+class Layout:
+    """One declared derived layout: written under
+    ``derived_path(sf_dir, leaf)`` by ``build(spark, sf_dir, path)`` from
+    the ``sources`` tables of an sf dir. ``config`` names every constant
+    that changes what ``build`` writes; ``upstream`` names the layouts
+    ``build`` reads."""
 
-    ``config`` (ADVICE r11): a definition fingerprint for the layout —
-    e.g. the MinHash index folds in N_PERMS / the permutation modulus /
-    shingle width / tokenizer regex. mtime alone cannot see a CODE
-    change to the layout's definition, so a constant edit would leave a
-    stale on-disk index that the Spark side silently consumes while the
-    oracle recomputes inline — a latent parity divergence. When given,
-    the layout is stale unless ``_DERIVED_CONFIG`` inside it matches
-    byte-for-byte; the builder records it via
-    :func:`write_derived_config` after a rebuild.
-    """
-    if not derived_is_fresh(
-        os.path.join(path, marker), os.path.join(sf_dir, f"{table}.parquet")
-    ):
-        return True
-    if config is not None:
-        cfg = os.path.join(path, "_DERIVED_CONFIG")
-        if not os.path.exists(cfg):
-            return True
-        with open(cfg) as f:
-            if f.read() != config:
-                return True
-    return False
+    leaf: str
+    sources: tuple[str, ...]
+    config: str
+    upstream: tuple[str, ...]
+    build: Callable[[SparkSession, str, str], object]
+
+    @property
+    def fingerprint(self) -> str:
+        """``config`` with every upstream fingerprint folded in verbatim,
+        so a definition change upstream rebuilds this layout too."""
+        return self.config + "".join(
+            f";{u}=[{LAYOUTS[u].fingerprint}]" for u in self.upstream
+        )
+
+    def fresh(self, sf_dir: str, path: str) -> bool:
+        """The commit rule: the fingerprint file exists, is newer than
+        every source parquet (the source can be regenerated while
+        ``.derived`` persists), and holds this layout's fingerprint (an
+        mtime cannot see a code change to the definition)."""
+        marker = os.path.join(path, DERIVED_CONFIG)
+        srcs = (os.path.join(sf_dir, f"{t}.parquet") for t in self.sources)
+        if not derived_is_fresh(marker, *srcs):
+            return False
+        with open(marker) as f:
+            return f.read() == self.fingerprint
 
 
-def write_derived_config(path: str, config: str) -> None:
-    """Record a derived layout's definition fingerprint (see
-    :func:`derived_stale`). Written AFTER the data so a failed build
-    never leaves a fresh-looking fingerprint over partial data."""
-    with open(os.path.join(path, "_DERIVED_CONFIG"), "w") as f:
-        f.write(config)
+#: Every declared derived layout by leaf, filled by :func:`derived_layout`.
+LAYOUTS: dict[str, Layout] = {}
+
+
+def ensure(spark: SparkSession, sf_dir: str, layout: Layout) -> str:
+    """Build ``layout`` for ``sf_dir`` unless it is fresh; returns its path.
+
+    A stale directory is cleared first, so no file of an older build
+    survives into the new one, and the fingerprint is written last, so
+    an interrupted build never looks committed."""
+    path = derived_path(sf_dir, layout.leaf)
+    if not layout.fresh(sf_dir, path):
+        shutil.rmtree(path, ignore_errors=True)
+        layout.build(spark, sf_dir, path)
+        with open(os.path.join(path, DERIVED_CONFIG), "w") as f:
+            f.write(layout.fingerprint)
+    return path
+
+
+def derived_layout(
+    leaf: str,
+    *,
+    config: str,
+    sources: tuple[str, ...] = ("documents",),
+    upstream: tuple[str, ...] = (),
+) -> Callable[[Callable], Callable[[SparkSession, str], str]]:
+    """Declare a derived layout: record it in :data:`LAYOUTS` and turn the
+    decorated ``build(spark, sf_dir, path)`` into ``ensure(spark, sf_dir)
+    -> path`` under the same name (see :class:`Layout`)."""
+
+    def deco(build):
+        layout = Layout(leaf, tuple(sources), config, tuple(upstream), build)
+        LAYOUTS[leaf] = layout
+
+        @functools.wraps(build)
+        def ensure_layout(spark: SparkSession, sf_dir: str) -> str:
+            return ensure(spark, sf_dir, layout)
+
+        return ensure_layout
+
+    return deco
+
+
+def walk_layouts(sources: tuple[str, ...] | None = None) -> list[Layout]:
+    """Every declared layout, each after its upstream layouts; with
+    ``sources``, only the layouts built from those tables alone."""
+    order: dict[str, Layout] = {}
+
+    def visit(leaf: str) -> None:
+        if leaf not in order:
+            for u in LAYOUTS[leaf].upstream:
+                visit(u)
+            order[leaf] = LAYOUTS[leaf]
+
+    for leaf in LAYOUTS:
+        visit(leaf)
+    return [
+        lay for lay in order.values()
+        if sources is None or set(lay.sources) <= set(sources)
+    ]
 
 
 #: Memoized derived-layout read plans:
-#: ``(applicationId, normpath, _SUCCESS-mtime) -> DataFrame``. The twin
-#: of ``sources/tables._DF_CACHE`` for ``.derived`` layouts (guide §6 /
-#: §1.2: a repeated ``spark.read.parquet`` of an already-built layout
-#: pays file listing + footer schema inference — ~0.1 s of driver-side
-#: fixed cost per call, multiplied across the ~40 index-reading queries
-#: of a suite run). A DataFrame is an immutable logical plan, so reuse
-#: is always semantically safe. Keyed by the layout's ``_SUCCESS`` mtime
-#: so an in-session rebuild (``ensure_*`` after the driver regenerates
-#: the testdata) invalidates automatically, and by applicationId so a
-#: fresh session never sees another session's plans.
-_READ_CACHE: dict[tuple[str, str, float], DataFrame] = {}
+#: ``(applicationId, normpath, fingerprint mtime_ns) -> DataFrame``. The
+#: twin of ``sources/tables._DF_CACHE`` for ``.derived`` layouts (guide
+#: §6 / §1.2: a repeated ``spark.read.parquet`` of an already-built
+#: layout pays file listing + footer schema inference — ~0.1 s of
+#: driver-side fixed cost per call, multiplied across the ~40
+#: index-reading queries of a suite run). A DataFrame is an immutable
+#: logical plan, so reuse is always semantically safe. Keyed by the
+#: commit marker's mtime so an in-session rebuild invalidates
+#: automatically, and by applicationId so a fresh session never sees
+#: another session's plans.
+_READ_CACHE: dict[tuple[str, str, int], DataFrame] = {}
 
 
 def read_derived(spark: SparkSession, path: str) -> DataFrame:
     """Read a built ``.derived`` layout with plan memoization (callers
-    must have run their ``ensure_*`` first — that is what guarantees
-    ``_SUCCESS`` exists and is fresh).
+    must have run their ``ensure_*`` first).
 
-    ADVICE r13: never cache under a missing ``_SUCCESS`` (every rebuild
-    of a marker-less layout would map to the same -1.0 key and serve a
-    stale file-listing plan forever), and fold the ``_DERIVED_CONFIG``
-    mtime into the key — it is written LAST by ``write_derived_config``,
-    so a same-second in-session rebuild that the marker's
-    second-granularity mtime could miss still moves the key."""
+    ADVICE r13: never cache under a missing commit marker (every
+    rebuild of a marker-less layout would map to the same key and serve
+    a stale file-listing plan forever)."""
     app = spark.sparkContext.applicationId
     norm = os.path.normpath(path)
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
+    try:
+        mtime = os.stat(os.path.join(path, DERIVED_CONFIG)).st_mtime_ns
+    except FileNotFoundError:
         return spark.read.parquet(path)
-    cfg = os.path.join(path, "_DERIVED_CONFIG")
-    mtime = os.path.getmtime(marker) + (
-        os.path.getmtime(cfg) if os.path.exists(cfg) else 0.0
-    )
     key = (app, norm, mtime)
     df = _READ_CACHE.get(key)
     if df is None:
@@ -192,8 +252,6 @@ def derived_is_fresh(marker: str, *sources: str) -> bool:
     copies persist, and an existence-only check would then serve STALE
     data silently. mtime comparison makes re-derivation automatic.
     """
-    import os
-
     if not os.path.exists(marker):
         return False
     m = os.path.getmtime(marker)

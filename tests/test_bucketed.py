@@ -14,6 +14,7 @@ import shutil
 import pyarrow.parquet as pq
 
 from hadoop_cs4225_spark.operators import bucketed
+from hadoop_cs4225_spark.sources import sinks
 from tests.conftest import SF_ORACLE
 
 
@@ -40,7 +41,7 @@ def test_bucketed_regenerates_on_stale_source(spark, tmp_path):
         # And a fresh-catalog re-register (table dropped, files fresh)
         # is metadata-only: same rows, no rewrite (mtime unchanged).
         marker = os.path.join(
-            bucketed._DERIVED_ROOT, "sfstale", "bucketed_orders", "_SUCCESS"
+            sinks.derived_path(str(sfd), "bucketed_orders"), sinks.DERIVED_CONFIG
         )
         mtime = os.path.getmtime(marker)
         spark.sql(f"DROP TABLE {name}")
@@ -50,17 +51,17 @@ def test_bucketed_regenerates_on_stale_source(spark, tmp_path):
 
         # A bucket-spec change (N_BUCKETS or key) must force a rewrite
         # even though source mtimes are unchanged — the files' name-
-        # encoded bucket mapping no longer matches the catalog DDL.
-        spec_path = os.path.join(
-            bucketed._DERIVED_ROOT, "sfstale", "bucketed_orders", ".bucketspec"
-        )
-        with open(spec_path, "w") as f:
-            f.write("4:o_custkey")  # simulate files written under old spec
+        # encoded bucket mapping no longer matches the catalog DDL. The
+        # spec is part of the layout fingerprint.
+        with open(marker, "w") as f:
+            f.write("buckets=4;key=o_custkey")  # files written under old spec
+        tampered = os.path.getmtime(marker)
         bucketed.ensure_bucketed(spark, str(sfd), "orders", "o_custkey")
-        assert open(spec_path).read().strip() == f"{bucketed.N_BUCKETS}:o_custkey"
-        assert os.path.getmtime(marker) > mtime  # rewritten
+        assert open(marker).read() == f"buckets={bucketed.N_BUCKETS};key=o_custkey"
+        assert os.path.getmtime(marker) > tampered > mtime  # rewritten
+        assert spark.table(name).count() == 100
     finally:
         spark.sql(f"DROP TABLE IF EXISTS bkt_orders_sfstale")
         shutil.rmtree(
-            os.path.join(bucketed._DERIVED_ROOT, "sfstale"), ignore_errors=True
+            os.path.dirname(sinks.derived_path(str(sfd), "x")), ignore_errors=True
         )

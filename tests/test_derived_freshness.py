@@ -1,4 +1,5 @@
-"""The stale-layout guard (sources/sinks.py::derived_is_fresh).
+"""The stale-layout guard (sources/sinks.py: ``derived_is_fresh`` and
+the generic layout ``ensure``).
 
 Round-4 incident: the driver regenerated /root/testdata between rounds
 while .derived/ persisted, and existence-only _SUCCESS checks would
@@ -8,10 +9,25 @@ semantics that prevent that.
 
 from __future__ import annotations
 
+import dataclasses
 import os
+import shutil
 import time
 
-from hadoop_cs4225_spark.sources.sinks import derived_is_fresh
+import pytest
+
+from hadoop_cs4225_spark import registry
+from hadoop_cs4225_spark.sources.sinks import (
+    DERIVED_CONFIG,
+    LAYOUTS,
+    derived_is_fresh,
+    derived_path,
+    read_derived,
+    walk_layouts,
+)
+from tests.conftest import SF_SMOKE
+
+registry.load_all()
 
 
 def _touch(path: str, when: float | None = None) -> None:
@@ -53,33 +69,56 @@ def test_missing_source_is_stale(tmp_path):
     assert not derived_is_fresh(str(marker), str(tmp_path / "gone.parquet"))
 
 
-def test_config_fingerprint_invalidates(tmp_path):
+def test_config_fingerprint_invalidates(tmp_path, monkeypatch):
     """ADVICE r11: a derived layout is stale when its definition
     fingerprint changed, even if mtimes say fresh — a constant edit
     (N_PERMS, shingle width, tokenizer regex) must rebuild the index
-    instead of silently serving signatures of the OLD definition."""
-    from hadoop_cs4225_spark.sources.sinks import (
-        derived_stale,
-        write_derived_config,
-    )
+    instead of silently serving signatures of the OLD definition. The
+    generic ``sinks.ensure`` owns that rule for every layout: the
+    fingerprint file is the single commit marker."""
+    from hadoop_cs4225_spark.sources import sinks
 
+    monkeypatch.setattr(sinks, "DERIVED_ROOT", str(tmp_path / "derived"))
     now = time.time()
     sf = tmp_path / "sf"
     sf.mkdir()
     _touch(str(sf / "documents.parquet"), now - 100)
-    layout = tmp_path / "layout"
-    layout.mkdir()
-    _touch(str(layout / "_SUCCESS"), now)
+    builds = []
 
-    # fresh mtimes but NO recorded config -> stale
-    assert derived_stale(str(layout), str(sf), table="documents", config="v1")
-    write_derived_config(str(layout), "v1")
-    # matching config -> fresh
-    assert not derived_stale(str(layout), str(sf), table="documents", config="v1")
-    # definition changed -> stale again, mtimes untouched
-    assert derived_stale(str(layout), str(sf), table="documents", config="v2")
-    # config=None keeps the pure-mtime behavior for other layouts
-    assert not derived_stale(str(layout), str(sf), table="documents")
+    def build(spark, sf_dir, path):
+        builds.append(path)
+        os.makedirs(path)
+        _touch(os.path.join(path, "part-0"))
+
+    v1 = sinks.Layout("fp_layout", ("documents",), "v1", (), build)
+    path = sinks.ensure(None, str(sf), v1)
+    marker = os.path.join(path, sinks.DERIVED_CONFIG)
+    assert len(builds) == 1 and open(marker).read() == "v1"
+    # matching fingerprint, newer than the source -> fresh
+    assert sinks.ensure(None, str(sf), v1) == path and len(builds) == 1
+    # definition changed -> stale again, mtimes untouched; the stale
+    # directory is cleared before the rebuild
+    _touch(os.path.join(path, "leftover"))
+    sinks.ensure(None, str(sf), dataclasses.replace(v1, config="v2"))
+    assert len(builds) == 2 and open(marker).read() == "v2"
+    assert not os.path.exists(os.path.join(path, "leftover"))
+    # data present but no fingerprint -> never committed -> stale
+    os.remove(marker)
+    sinks.ensure(None, str(sf), v1)
+    assert len(builds) == 3
+    # source regenerated after the build -> stale
+    _touch(str(sf / "documents.parquet"), time.time() + 100)
+    sinks.ensure(None, str(sf), v1)
+    assert len(builds) == 4
+
+    # a build that fails leaves no fingerprint behind
+    def boom(spark, sf_dir, path):
+        os.makedirs(path)
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError):
+        sinks.ensure(None, str(sf), dataclasses.replace(v1, config="v3", build=boom))
+    assert not os.path.exists(marker)
 
 
 def test_sig_index_config_covers_definition_constants():
@@ -92,9 +131,95 @@ def test_sig_index_config_covers_definition_constants():
     from hadoop_cs4225_spark.operators import dedup
     from hadoop_cs4225_spark.operators.wordcount import TOKEN_DELIM_RE
 
-    cfg = dedup._sig_index_config()
+    cfg = LAYOUTS["documents_minhash_sigs"].fingerprint
     assert str(dedup.N_PERMS) in cfg
     assert str(dedup._PERM_MOD) in cfg
     assert TOKEN_DELIM_RE in cfg
     assert "shingle=3" in cfg
-    assert dedup._shingle_sets_config() in cfg
+    assert LAYOUTS["documents_shingle_sets"].fingerprint in cfg
+
+
+def test_layout_fingerprints_fold_upstream():
+    """Every declared layout's fingerprint carries each upstream
+    layout's fingerprint verbatim, so a definition change anywhere
+    upstream rebuilds it; the walk puts upstream layouts first."""
+    order = [lay.leaf for lay in walk_layouts()]
+    assert sorted(order) == sorted(LAYOUTS)
+    for leaf, lay in LAYOUTS.items():
+        for up in lay.upstream:
+            assert LAYOUTS[up].fingerprint in lay.fingerprint, (leaf, up)
+            assert order.index(up) < order.index(leaf), (leaf, up)
+
+
+def test_warm_derived_layouts_builds_the_table(spark):
+    """The warm-up walks the layout table: it builds exactly the
+    declared layouts (the format copies included), each committed
+    under its own fingerprint."""
+    timings = registry.warm_derived_layouts(spark, SF_SMOKE)
+    assert set(timings) == set(LAYOUTS)
+    assert {
+        "orders_csv", "orders_jsonl", "orders_orc", "orders_xml",
+        "docs_bin", "orders_evolved",
+    } <= set(timings)
+    for leaf, lay in LAYOUTS.items():
+        with open(os.path.join(derived_path(SF_SMOKE, leaf), DERIVED_CONFIG)) as f:
+            assert f.read() == lay.fingerprint, leaf
+
+
+def test_read_derived_caches_only_committed_layouts(spark, tmp_path):
+    """``read_derived`` memoizes a read plan only under the layout's
+    commit marker and keys it on the marker's mtime alone."""
+    path = str(tmp_path / "layout")
+    spark.range(3).write.parquet(path)
+    assert read_derived(spark, path) is not read_derived(spark, path)
+    marker = os.path.join(path, DERIVED_CONFIG)
+    _touch(marker)
+    first = read_derived(spark, path)
+    assert read_derived(spark, path) is first
+    st = os.stat(marker)
+    os.utime(marker, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+    assert read_derived(spark, path) is not first
+
+
+def test_ivf_pq_fingerprint_guards_method_memo(spark):
+    """The IVF-PQ index commits under a definition fingerprint, so a
+    definition change rebuilds it AND the ANN method memos that fold
+    the fingerprint's mtime into their key."""
+    from hadoop_cs4225_spark.operators.dedup import evict_memo
+    from hadoop_cs4225_spark.operators.pq import (
+        ensure_ivf_pq_index,
+        ivf_pq_index_probe,
+    )
+    from hadoop_cs4225_spark.operators.similarity import method_topk_frame
+
+    marker = os.path.join(ensure_ivf_pq_index(spark, SF_SMOKE), DERIVED_CONFIG)
+    assert open(marker).read() == LAYOUTS["embeddings_ivf_pq"].fingerprint
+    label = "fingerprint_test"
+    try:
+        first = method_topk_frame(spark, SF_SMOKE, label, ivf_pq_index_probe)
+        assert method_topk_frame(spark, SF_SMOKE, label, ivf_pq_index_probe) is first
+        want = sorted(first.collect())
+        with open(marker, "w") as f:
+            f.write("n_sub=2")  # an index written under another definition
+        second = method_topk_frame(spark, SF_SMOKE, label, ivf_pq_index_probe)
+        assert second is not first
+        assert open(marker).read() == LAYOUTS["embeddings_ivf_pq"].fingerprint
+        assert sorted(second.collect()) == want
+    finally:
+        evict_memo(spark, SF_SMOKE, f"sim:method_topk:{label}")
+
+
+def test_ngram5_cold_build_leaves_no_cached_rdds(spark):
+    """The 5-gram build persists its shingle rows for the df count and
+    the join probe, and frees them after the write."""
+    from hadoop_cs4225_spark.operators.text_analysis import ensure_ngram5_postings
+
+    def cached_ids() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    shutil.rmtree(derived_path(SF_SMOKE, "documents_5gram_postings"), ignore_errors=True)
+    before = cached_ids()
+    path = ensure_ngram5_postings(spark, SF_SMOKE)
+    # earlier tests' RDDs may be cleaned meanwhile; none may be added
+    assert cached_ids() <= before
+    assert os.path.exists(os.path.join(path, DERIVED_CONFIG))

@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from hadoop_cs4225_spark import registry
 from hadoop_cs4225_spark.operators.text_analysis import (
-    _token_counts_config,
     _toks,
     ensure_token_counts,
     ensure_token_df,
@@ -114,7 +113,9 @@ def test_vocab_jaccard_reads_layout_below_checkpoint(spark):
 def test_token_index_config_covers_definition():
     from hadoop_cs4225_spark.operators.wordcount import TOKEN_DELIM_RE
 
-    cfg = _token_counts_config()
+    from hadoop_cs4225_spark.sources.sinks import LAYOUTS
+
+    cfg = LAYOUTS["documents_token_counts"].fingerprint
     assert TOKEN_DELIM_RE in cfg
     assert "grain=doc,word" in cfg
 

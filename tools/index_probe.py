@@ -1,13 +1,14 @@
-"""Scaling exponents for the WRITTEN-INDEX BUILDS (``ensure_*``).
+"""Scaling exponents for the WRITTEN-INDEX BUILDS (``sinks.LAYOUTS``).
 
 SCALING.md measures query runtimes; since r12 the heavy corpus passes
 live in write-once ``.derived`` layouts, so the 100 TB question for the
 index families is the BUILD cost's growth (VERDICT r13 "what's wrong"
 #2: index construction had no recorded exponents — `bench.py` now
 reports the cost per run via ``warmup_sec``; this records how it
-scales). Each ensure_* builds COLD (its target dir removed first) on
-the x1/x2/x4 amplified corpora in dependency order, so every timing is
-one isolated build; the exponent is log(t4/t2)/log(2) with min-of-2
+scales). Every declared layout built from documents or embeddings
+alone builds COLD (its target dir removed first) on the x1/x2/x4
+amplified corpora, walking the table upstream first, so every timing
+is one isolated build; the exponent is log(t4/t2)/log(2) with min-of-2
 adjudication on the top two sizes.
 
 Usage::
@@ -33,35 +34,19 @@ SUPERLINEAR = 1.35
 
 
 def builders():
-    """(name, ensure_fn, derived_leaf) in dependency order."""
-    from hadoop_cs4225_spark.operators import dedup, multimodal_ops, pq, text_analysis
-
-    return (
-        ("shingle_sets", dedup.ensure_shingle_sets, "documents_shingle_sets"),
-        ("shingle_postings", dedup.ensure_shingle_postings, "documents_shingle_postings"),
-        ("shingle_prefix", dedup.ensure_shingle_prefix, "documents_shingle_prefix"),
-        ("minhash_sig_index", dedup.ensure_minhash_sig_index, "documents_minhash_sigs"),
-        ("simhash_fp_index", dedup.ensure_simhash_fp_index, "documents_simhash_fps"),
-        ("winnow_fp_index", dedup.ensure_winnow_fp_index, "documents_winnow_fps"),
-        ("token_counts", text_analysis.ensure_token_counts, "documents_token_counts"),
-        ("token_df", text_analysis.ensure_token_df, "documents_token_df"),
-        ("ngram5_postings", text_analysis.ensure_ngram5_postings, "documents_5gram_postings"),
-        ("byte_shingle_sets", multimodal_ops.ensure_byte_shingle_sets, "documents_byte_shingles"),
-        ("byte_minhash_sigs", multimodal_ops.ensure_byte_minhash_sigs, "documents_byte_minhash_sigs"),
-        ("ivf_pq_index", pq.ensure_ivf_pq_index, "embeddings_ivf_pq"),
-    )
-
-
-def cold_build(spark, ensure, sf_dir: str, leaf: str) -> float:
+    """The probed layouts, upstream first."""
     from hadoop_cs4225_spark.sources import sinks
-    from hadoop_cs4225_spark.sources.sinks import derived_path
 
-    target = derived_path(sf_dir, leaf)
-    if os.path.isdir(target):
-        shutil.rmtree(target)
+    return sinks.walk_layouts(("documents", "embeddings"))
+
+
+def cold_build(spark, layout, sf_dir: str) -> float:
+    from hadoop_cs4225_spark.sources import sinks
+
+    shutil.rmtree(sinks.derived_path(sf_dir, layout.leaf), ignore_errors=True)
     sinks._READ_CACHE.clear()
     t0 = time.perf_counter()
-    ensure(spark, sf_dir)
+    sinks.ensure(spark, sf_dir, layout)
     return time.perf_counter() - t0
 
 
@@ -77,19 +62,16 @@ def main() -> None:
         dirs[k] = ensure_amplified(spark, k)
         ensure_amplified_emb(spark, k)
 
-    # leaf names actually written may differ; discover per ensure by
-    # calling once at x1 and using the returned path's basename.
     rows = []
-    for name, ensure, _leaf in builders():
-        leaf = os.path.basename(ensure(spark, dirs[1]))
-        ts = {k: cold_build(spark, ensure, dirs[k], leaf) for k in COPIES}
+    for layout in builders():
+        ts = {k: cold_build(spark, layout, dirs[k]) for k in COPIES}
         raw = math.log(ts[4] / ts[2]) / math.log(2)
         for k in (2, 4):  # symmetric min-of-2 adjudication
-            ts[k] = min(ts[k], cold_build(spark, ensure, dirs[k], leaf))
+            ts[k] = min(ts[k], cold_build(spark, layout, dirs[k]))
         adj = math.log(ts[4] / ts[2]) / math.log(2)
         verdict = "SUPER-LINEAR" if adj > SUPERLINEAR else "ok"
         rows.append(
-            f"| {name} | x2->x4 | "
+            f"| {layout.leaf} | x2->x4 | "
             + ", ".join(f"{k}:{ts[k]:.2f}" for k in COPIES)
             + f" | {raw:.2f} | {adj:.2f} | {verdict} |"
         )
@@ -100,10 +82,11 @@ def main() -> None:
     header = [
         "# INDEX_SCALING — written-layout BUILD cost vs corpus size",
         "",
-        "Measured by `tools/index_probe.py`: every `ensure_*` index",
-        "build COLD (target removed first) on the x1/x2/x4 amplified",
-        "corpora, dependency-ordered so each timing is one isolated",
-        "build. Exponent = log(t4/t2)/log(2), min-of-2 adjudicated on",
+        "Measured by `tools/index_probe.py`: it walks the declared",
+        "layout table (`sinks.LAYOUTS`, upstream first) and builds every",
+        "layout derived from documents or embeddings alone COLD (target",
+        "removed first) on the x1/x2/x4 amplified corpora, so each",
+        "timing is one isolated build. Exponent = log(t4/t2)/log(2), min-of-2 adjudicated on",
         "the top sizes; > 1.35 flags SUPER-LINEAR. Per-run build cost",
         "at the bench SF is reported by bench.py as `warmup_sec` /",
         "`warmup_layouts` in BENCH_DETAIL.json.",

@@ -53,9 +53,9 @@ from datetime import datetime, timezone
 from pyspark.sql import functions as F
 
 from hadoop_cs4225_spark import registry
-from hadoop_cs4225_spark.operators.partitioned import _DERIVED_ROOT
 from hadoop_cs4225_spark.session import get_spark
-from hadoop_cs4225_spark.sources.sinks import derived_is_fresh
+from hadoop_cs4225_spark.sources import sinks
+from hadoop_cs4225_spark.sources.sinks import DERIVED_ROOT, derived_is_fresh
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCALING_PATH = os.path.join(ROOT, "SCALING.md")
@@ -517,7 +517,7 @@ def ensure_amplified(spark, k: int) -> str:
     overlapped ~fully — so any exact pair-reporting operator had a
     genuinely quadratic TRUE output on the amplified corpus and the
     probe flagged the operator for the corpus's sin)."""
-    out = os.path.join(_DERIVED_ROOT, "scaleprobe", f"x{k}")
+    out = os.path.join(DERIVED_ROOT, "scaleprobe", f"x{k}")
     marker = os.path.join(out, "documents.parquet", "_SUCCESS")
     src = os.path.join(BASE_SF, "documents.parquet")
     if not derived_is_fresh(marker, src):
@@ -554,7 +554,7 @@ def ensure_amplified(spark, k: int) -> str:
 def ensure_amplified_emb(spark, k: int) -> str:
     """x{k} vector corpus next to the x{k} documents (same dir so one
     sf_dir serves queries that read either table)."""
-    out = os.path.join(_DERIVED_ROOT, "scaleprobe", f"x{k}")
+    out = os.path.join(DERIVED_ROOT, "scaleprobe", f"x{k}")
     marker = os.path.join(out, "embeddings.parquet", "_SUCCESS")
     src = os.path.join(BASE_SF, "embeddings.parquet")
     if not derived_is_fresh(marker, src):
@@ -742,38 +742,11 @@ def main() -> int:
     copies = COPIES[:2] if quick else COPIES
     if doc_names or emb_names:
         dirs = {k: ensure_amplified(spark, k) for k in copies}
-        # pre-build the derived layouts per amplified dir: the LSH and
-        # set-similarity families read written .derived layouts
-        # (VERDICT r10 task 6 / r11 task 4), and the one-off builds
-        # must not land inside a timed run
-        from hadoop_cs4225_spark.operators.dedup import (
-            ensure_minhash_sig_index,
-            ensure_shingle_postings,
-            ensure_shingle_sets,
-            ensure_simhash_fp_index,
-            ensure_winnow_fp_index,
-        )
-
-        from hadoop_cs4225_spark.operators.multimodal_ops import (
-            ensure_byte_minhash_sigs,
-            ensure_byte_shingle_sets,
-        )
-        from hadoop_cs4225_spark.operators.text_analysis import (
-            ensure_ngram5_postings,
-        )
-
+        # pre-build every layout derived from documents per amplified
+        # dir, so the one-off builds never land inside a timed run
         for k in copies:
-            ensure_shingle_sets(spark, dirs[k])
-            ensure_shingle_postings(spark, dirs[k])
-            ensure_minhash_sig_index(spark, dirs[k])
-            ensure_simhash_fp_index(spark, dirs[k])
-            ensure_winnow_fp_index(spark, dirs[k])
-            # r14 written layouts (byte-shingle sets/sigs, 5-gram
-            # postings): built once per size so their consumers'
-            # exponents measure steady-state reads, not one-off builds
-            ensure_byte_shingle_sets(spark, dirs[k])
-            ensure_byte_minhash_sigs(spark, dirs[k])
-            ensure_ngram5_postings(spark, dirs[k])
+            for layout in sinks.walk_layouts(("documents",)):
+                sinks.ensure(spark, dirs[k], layout)
     for name in doc_names:
         fn = registry.QUERIES[name]
         timed(fn, spark, dirs[copies[0]])  # warm: session + codegen
