@@ -133,72 +133,80 @@ PERMANENT_PRIORITY = (
 )
 
 #: Driver-correctness priority window. The driver records CORRECTNESS
-#: rows for the FIRST 50 queries in ``queries()`` iteration order.
-#: ROUND-13 ROTATION (VERDICT r12 task 1): round 12's window went
-#: 50/50 green. This window = the 3 PERMANENT golden slots + the FOUR
-#: r12 net-new registrations (never driver-checked; each oracled,
-#: invariant-tested in tests/test_round12_ops.py, replica-verified
-#: green at sf0.01 by the r12 judge) + the 18 r05-stale rows (the
-#: oldest cohort: TPC-H q7 q9 q10 q12 q13 q14 q15 q16 q17 q19 q20 q22
-#: plus six relational shapes) + 25 of the 45 r06 rows, capability
-#: anchors first (dedup cluster family, shingle/winnowing
-#: fingerprints, ANN/PQ audit+probe family, streaming-twin event
-#: rollups, bucketed join, pagerank, CDC apply, schema evolution,
-#: Python DataSource, map algebra). The 20 r06 rows left over
-#: (incl. the three rows-only twins cosine_topk_pandas,
-#: label_centroid_stats, topk_users_approx — each twin-checked every
-#: pytest run) are the r14 rotation seed.
+#: rows for the FIRST 50 queries in ``queries()`` iteration order, and
+#: the window is the min-staleness cut of the committed CORRECTNESS
+#: history (tests/test_oracle_parity.py derives that rule from the
+#: files). ROUND-15 ROTATION: rounds 13 and 14 both checked the same 50
+#: queries, so this window = the 3 PERMANENT golden slots + the 13
+#: registered queries no CORRECTNESS file has checked yet + the 20 rows
+#: last checked in r06 (the oldest cohort; incl. the three rows-only
+#: twins cosine_topk_pandas, label_centroid_stats, topk_users_approx,
+#: each twin-checked every pytest run) + the first 14 of the 48 rows
+#: last checked in r07, in registration order. The 34 r07 rows left
+#: over are the next rotation seed: orders_sql_script_ewma,
+#: weighted_aes_sample, source_mean_bootstrap_ci, events_user_path_topk,
+#: lineitem_benford_audit, order_ship_delay_stats, skyline_orders_pareto,
+#: events_max_concurrency, events_daily_cusum, events_count_acf,
+#: doc_mad_outliers, lang_source_chi2, events_interval_coverage,
+#: ship_delay_survival, orders_monthly_psi, orders_seasonal_decompose,
+#: part_abc_classes, revenue_forecast_backtest, source_length_ks,
+#: markov_next_event_accuracy, event_entropy_rate,
+#: events_type_crosscorr, source_length_qnorm, events_theilsen_trend,
+#: source_length_mannwhitney, orders_revenue_runs_test,
+#: events_fano_factor, kmeans_embedding_clusters,
+#: supplier_triangle_stats, supplier_communities_lpa,
+#: corpus_to_training_set, corpus_health_report.
 _PRIORITY = PERMANENT_PRIORITY + (
-    # --- the 4 r12 net-new registrations (never driver-checked) ---
-    "doc_keyword_tag_counts",
-    "orders_seasonal_naive_mase",
-    "embedding_residual_quant_audit",
-    "dedup_survivorship_report",
-    # --- the 18 r05-stale rows (oldest cohort) ---
-    "q7_nation_volume_shipping",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q12_shipmode_priority",
-    "q13_customer_order_histogram",
-    "q14_promo_revenue_ratio",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q17_small_quantity_revenue",
-    "q19_disjunctive_predicates",
-    "q20_part_stock_suppliers",
-    "q22_idle_rich_customers",
-    "customer_order_multiset_ops",
-    "event_props_variant",
-    "nation_metrics_unpivot",
-    "order_value_percentiles_approx",  # rows-only, twin-checked
-    "order_value_winsorized",
-    "parts_never_shipped",
-    # --- 25 of the 45 r06 rows, capability anchors first ---
-    "dedup_clusters",                # label-propagation dup clusters
-    "dedup_canonical_keep",          # survivorship canonical pick
-    "dedup_cluster_size_histogram",  # cluster-size profile
-    "shingle_containment_pairs",     # asymmetric containment
-    "shingle_idf_similarity_topk",   # idf-weighted set similarity
-    "doc_winnowing_fingerprints",    # winnowing fingerprint index
-    "duplicate_ngram_coverage",      # dup n-gram mass audit
-    "ann_recall_audit",              # LSH recall vs brute truth
-    "ann_rerank_topk",               # bucket+rerank ANN
-    "lsh_recall_audit",              # recall ratio audit
-    "ivf_pq_index_probe",            # written IVF-PQ index probe
-    "ivf_pq_query_topk",             # IVF-PQ ADC query
-    "pq_adc_query_topk",             # PQ asymmetric distance
-    "pq_code_histogram",             # PQ code balance
-    "embedding_gram_topeig",         # Gram top-eigenvector
-    "events_session_windows",        # session windowing (stream twin)
-    "events_sliding_avg",            # sliding windows (stream twin)
-    "events_dedup_latest",           # keep-latest dedup (stream twin)
-    "events_daily_ewma",             # EWMA smoothing
-    "bucketed_segment_revenue",      # bucketed co-located join
-    "pagerank_trade_network",        # iterative graph
-    "orders_cdc_apply",              # CDC merge apply
-    "orders_schema_evolution_scan",  # schema-evolution union
-    "pyds_scan_rollup",              # Python DataSource scan
-    "user_event_map_algebra",        # map-column algebra
+    # --- the 13 never driver-checked registrations ---
+    "dedup_near_dup_gc",
+    "newcrawl_near_dup_gate",
+    "minhash_estimate_error_audit",
+    "newcrawl_oov_rate",
+    "dup_quality_interaction",
+    "embedding_half_drift",
+    "embedding_knn_label_noise",
+    "ivf_reassignment_churn",
+    "events_daily_ohlc",
+    "media_byte_minhash_pairs",
+    "cross_corpus_decon_report",
+    "bloom_pruned_decon_docs",
+    "lineitem_woe_iv",
+    # --- the 20 r06-stale rows (oldest cohort) ---
+    "events_hot_key_profile",
+    "order_trend_regression",
+    "star_constraint_audit",
+    "order_window_rank_suite",
+    "bpe_pair_counts",
+    "quality_filter_funnel",
+    "doc_unigram_logprob",
+    "lang_confusion_matrix",
+    "source_kl_divergence",
+    "label_centroid_stats",  # rows-only, twin-checked
+    "cosine_topk_pandas",  # rows-only, twin-checked
+    "event_transition_matrix",
+    "events_user_recency_churn",
+    "user_activity_gini",
+    "topk_users_approx",  # rows-only, twin-checked
+    "epoch_shard_plan",
+    "per_source_doc_cap",
+    "order_fill_gap_cogroup",
+    "customer_rfm_segments",
+    "part_brand_affinity",
+    # --- the first 14 of the 48 r07 rows, registration order ---
+    "source_dup_cross_matrix",
+    "source_length_powerlaw",
+    "source_vocab_heaps",
+    "bigram_pmi_topk",
+    "doc_zipf_fit",
+    "bm25_search_topk",
+    "term_keyness_llr",
+    "source_simpson_diversity",
+    "source_vocab_jaccard",
+    "quality_score_calibration",
+    "doc_bigram_logprob",
+    "label_norm_stats_arrow",  # rows-only, twin-checked
+    "events_minute_peak",
+    "events_weekly_seasonality",
 )
 
 def warm_shared_frames(spark: SparkSession, sf_dir: str) -> dict[str, float]:

@@ -10,6 +10,10 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
+FIXTURES = REPO / "tests" / "fixtures"
 
 
 def test_wordcount_cli(tmp_path):
@@ -18,12 +22,12 @@ def test_wordcount_cli(tmp_path):
     res = subprocess.run(
         [
             sys.executable, "-m", "hadoop_cs4225_spark.cli", "wordcount",
-            "/root/reference/input/file01.txt",
-            "/root/reference/input/file02.txt",
+            str(FIXTURES / "file01.txt"),
+            str(FIXTURES / "file02.txt"),
             str(out),
         ],
         capture_output=True, text=True, timeout=240, env=env,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     assert res.returncode == 0, res.stderr[-800:]
     lines = sorted(
@@ -54,7 +58,7 @@ def test_cli_query_list_and_run(tmp_path, capsys):
             "--out", outdir,
         ],
         capture_output=True, text=True, timeout=240, env=env,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     assert res.returncode == 0, res.stderr[-800:]
     import duckdb

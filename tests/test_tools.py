@@ -154,21 +154,22 @@ def test_scale_probe_covers_entire_registry():
 
 def test_scaling_rows_carry_probed_at_and_none_predate_testdata():
     """VERDICT r11 task 6: every SCALING.md row must carry a parseable
-    probed_at stamp no older than the current testdata regeneration —
-    an exponent measured on the previous corpus is not evidence about
-    this one. When the driver regenerates /root/testdata, re-run
-    `scale_probe.py --refresh-stale` (stale rows only) to turn this
-    green again."""
+    probed_at stamp and must have been measured on the current testdata
+    corpus — an exponent measured on another corpus is not evidence
+    about this one. The corpus is identified by its content digest, so
+    re-creating the same bytes with a newer mtime keeps rows fresh. When
+    the testdata bytes change, re-run `scale_probe.py --refresh-stale`
+    (stale rows only) to turn this green again."""
     from tools import scale_probe
 
     rows = scale_probe.read_scaling_rows()
-    assert rows, "SCALING.md has no parseable rows (probed_at column missing?)"
-    data_mtime = scale_probe.testdata_mtime()
-    stale = sorted(
-        n for n, r in rows.items() if scale_probe.row_is_stale(r, data_mtime)
-    )
+    assert rows, "SCALING.md has no parseable rows (corpus column missing?)"
+    for r in rows.values():
+        scale_probe.parse_probed_at(r["probed_at"])
+    digest = scale_probe.corpus_digest()
+    stale = sorted(n for n, r in rows.items() if scale_probe.row_is_stale(r, digest))
     assert not stale, (
-        f"{len(stale)} SCALING rows predate the current testdata — run "
+        f"{len(stale)} SCALING rows were measured on another corpus — run "
         f"tools/scale_probe.py --refresh-stale: {stale[:10]}..."
     )
 
@@ -190,8 +191,19 @@ def test_scaling_covers_entire_registry_rows():
 
 
 def test_scale_probe_row_roundtrip(tmp_path, monkeypatch):
-    """_fmt_row output must parse back through read_scaling_rows."""
+    """_fmt_row output must parse back through read_scaling_rows, and
+    staleness follows the corpus bytes, not their mtimes."""
+    import os
+
     from tools import scale_probe
+
+    corpus = tmp_path / "testdata"
+    (corpus / "sf0.001" / "docs.parquet").mkdir(parents=True)
+    part = corpus / "sf0.001" / "docs.parquet" / "part-0.parquet"
+    part.write_bytes(b"PAR1 rows PAR1")
+    (corpus / "sf0.001" / "docs.parquet" / "_SUCCESS").write_bytes(b"")
+    (corpus / "sf0.001" / "orders.parquet").write_bytes(b"PAR1 orders PAR1")
+    digest = scale_probe.corpus_digest(str(corpus))
 
     row = {
         "name": "q_example",
@@ -201,13 +213,28 @@ def test_scale_probe_row_roundtrip(tmp_path, monkeypatch):
         "exp": "0.19",
         "verdict": "ok",
         "probed_at": "2026-08-16T13:00:00Z",
+        "corpus": digest,
     }
     path = tmp_path / "SCALING.md"
     path.write_text("header\n" + scale_probe._fmt_row(row) + "\n")
     monkeypatch.setattr(scale_probe, "SCALING_PATH", str(path))
     back = scale_probe.read_scaling_rows()
     assert back == {"q_example": row}
-    # staleness math: stamp < mtime -> stale, stamp >= mtime -> fresh
-    t = scale_probe.parse_probed_at(row["probed_at"])
-    assert scale_probe.row_is_stale(row, t + 1)
-    assert not scale_probe.row_is_stale(row, t - 1)
+    scale_probe.parse_probed_at(back["q_example"]["probed_at"])
+
+    # same bytes re-created later: newer mtimes, same corpus
+    later = part.stat().st_mtime + 86400
+    for f in corpus.rglob("*"):
+        if f.is_file():
+            os.utime(f, (later, later))
+    assert scale_probe.corpus_digest(str(corpus)) == digest
+    # one byte changed: another corpus
+    part.write_bytes(b"PAR1 rowz PAR1")
+    other = scale_probe.corpus_digest(str(corpus))
+    assert other != digest
+
+    assert not scale_probe.row_is_stale(row, digest)
+    assert scale_probe.row_is_stale(row, other)
+    assert scale_probe.row_is_stale({**row, "corpus": None}, digest)
+    no_digest = {k: v for k, v in row.items() if k != "corpus"}
+    assert scale_probe.row_is_stale(no_digest, digest)

@@ -30,19 +30,23 @@ Usage::
     PYTHONPATH=/root/repo python tools/scale_probe.py --refresh-stale # stale rows only
     PYTHONPATH=/root/repo python tools/scale_probe.py --only q1 q2    # named rows
 
-Writes SCALING.md at the repo root. Every row carries a ``probed_at``
-UTC timestamp (VERDICT r11 task 6): a row is STALE when it predates the
-current testdata parquet (the driver regenerates the corpus between
-rounds, and an exponent measured on the previous corpus is not evidence
-about this one). ``--refresh-stale`` re-probes exactly the stale or
-missing rows and keeps every fresh row verbatim, so the zero-
-super-linear claim stays live at the cost of re-measuring only what
-moved; ``tests/test_tools.py`` asserts no committed row predates the
-testdata.
+Writes SCALING.md at the repo root, row by row as each probe lands, so
+an interrupted run keeps what it measured. Every row carries a
+``probed_at`` UTC timestamp and the ``corpus`` digest it was measured
+on: a sha256 over the relative path and bytes of every parquet file
+under the testdata root. A row is STALE when its digest differs from
+the current corpus or is missing — an exponent measured on a different
+corpus is not evidence about this one, while the same bytes re-created
+with a newer mtime are the same corpus. ``--refresh-stale`` re-probes
+exactly the stale or missing rows and keeps every fresh row verbatim,
+so the zero-super-linear claim stays live at the cost of re-measuring
+only what moved; ``tests/test_tools.py`` asserts no committed row is
+stale.
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 import re
@@ -639,28 +643,36 @@ def coverage_gaps() -> tuple[list[str], list[str]]:
     )
 
 
-def testdata_mtime() -> float:
-    """Regeneration timestamp of the current testdata: max mtime over
-    every sf dir's parquet files — a SCALING row probed before this is
-    evidence about a corpus that no longer exists."""
-    latest = 0.0
-    for dirpath, _dirs, names in os.walk(TESTDATA_ROOT):
-        for n in names:
-            if n.endswith(".parquet") or n == "_SUCCESS":
-                latest = max(latest, os.path.getmtime(os.path.join(dirpath, n)))
-    return latest
+def corpus_digest(root: str = TESTDATA_ROOT) -> str:
+    """sha256 over the relative path and bytes of every parquet file
+    (and ``_SUCCESS`` marker) under ``root``, walked in sorted order —
+    the identity of the corpus a SCALING row was measured on. Unlike
+    an mtime it survives re-creating the same bytes and changes with
+    any one byte."""
+    h = hashlib.sha256()
+    for dirpath, dirs, names in os.walk(root):
+        dirs.sort()
+        for n in sorted(names):
+            if not (n.endswith(".parquet") or n == "_SUCCESS"):
+                continue
+            path = os.path.join(dirpath, n)
+            h.update(os.path.relpath(path, root).encode() + b"\0")
+            with open(path, "rb") as f:
+                data = f.read()
+            h.update(len(data).to_bytes(8, "little") + data)
+    return h.hexdigest()
 
 
 _ROW_RE = re.compile(
     r"^\| (?P<name>\S+) \| (?P<span>\S+) \| (?P<ts>[^|]+) \| "
     r"(?P<raw>-?\d+\.\d+) \| (?P<exp>-?\d+\.\d+) \| (?P<verdict>[^|]+?) "
-    r"\| (?P<probed_at>\S+) \|$"
+    r"\| (?P<probed_at>\S+) \| (?P<corpus>\S+) \|$"
 )
 
 
 def read_scaling_rows() -> dict[str, dict]:
     """Parse the committed SCALING.md into {query: row} (empty when the
-    file is absent or pre-dates the probed_at column)."""
+    file is absent or pre-dates the corpus column)."""
     rows: dict[str, dict] = {}
     if not os.path.exists(SCALING_PATH):
         return rows
@@ -676,18 +688,53 @@ def parse_probed_at(stamp: str) -> float:
     return datetime.fromisoformat(stamp.replace("Z", "+00:00")).timestamp()
 
 
-def row_is_stale(row: dict, data_mtime: float) -> bool:
-    try:
-        return parse_probed_at(row["probed_at"]) < data_mtime
-    except Exception:
-        return True
+def row_is_stale(row: dict, digest: str) -> bool:
+    """True when the row was measured on another corpus or records none."""
+    return row.get("corpus") != digest
 
 
 def _fmt_row(row: dict) -> str:
     return (
         f"| {row['name']} | {row['span']} | {row['ts']} | {row['raw']} "
-        f"| {row['exp']} | {row['verdict']} | {row['probed_at']} |"
+        f"| {row['exp']} | {row['verdict']} | {row['probed_at']} "
+        f"| {row['corpus']} |"
     )
+
+
+def write_scaling(rows: dict[str, dict], master: str) -> int:
+    """Write SCALING.md from ``rows`` in probe-list order; returns the
+    number of SUPER-LINEAR rows."""
+    order = [n for n in (*DOC_QUERIES, *EMB_QUERIES, *SF_QUERIES) if n in rows]
+    lines = [
+        "# SCALING — measured runtime-vs-corpus-size exponents",
+        "",
+        f"Generated by `tools/scale_probe.py` on {master}. Exponent =",
+        "log(time ratio)/log(data ratio) between the two largest sizes,",
+        "after a warm-up run (session/codegen cost excluded). ~1.0 =",
+        "linear; > 1.35 flagged SUPER-LINEAR; < 1 = fixed cost still",
+        "dominates at these sizes. Amplified corpora keep duplicate",
+        "density constant (copies are mutually non-duplicate), so the",
+        "dedup/LSH exponents measure the algorithm, not pair blow-up.",
+        "Adjudication is SYMMETRIC: the top two sizes are always timed",
+        "twice and the per-size MIN used; `exp_raw` is the first-run",
+        "estimate (kept so the adjudication itself is auditable) and",
+        "`exponent` the adjudicated value the verdict uses. Each row",
+        "carries the UTC time it was probed and the sha256 `corpus`",
+        "digest of the testdata parquet it was measured on; a row whose",
+        "digest differs from the current testdata is STALE and",
+        "re-probed by `scale_probe.py --refresh-stale`",
+        "(tests/test_tools.py asserts none are committed stale).",
+        "",
+        "| query | sizes | times (s) | exp_raw | exponent | verdict | probed_at | corpus |",
+        "|---|---|---|---|---|---|---|---|",
+    ]
+    n_super = 0
+    for name in order:
+        n_super += rows[name]["verdict"].strip() != "ok"
+        lines.append(_fmt_row(rows[name]))
+    with open(SCALING_PATH, "w") as f:
+        f.write("\n".join(lines) + "\n")
+    return n_super
 
 
 def main() -> int:
@@ -702,13 +749,13 @@ def main() -> int:
     assert not stale, f"probe lists reference unregistered queries: {stale}"
 
     prior = read_scaling_rows()
-    data_mtime = testdata_mtime()
+    digest = corpus_digest()
 
     def selected(name: str) -> bool:
         if only is not None:
             return name in only
         if refresh_stale:
-            return name not in prior or row_is_stale(prior[name], data_mtime)
+            return name not in prior or row_is_stale(prior[name], digest)
         return True
 
     doc_names = [n for n in (DOC_QUERIES[:3] if quick else DOC_QUERIES) if selected(n)]
@@ -721,14 +768,17 @@ def main() -> int:
         f"{len(prior)} prior rows"
     )
     spark = get_spark(app_name="scale-probe")
-    rows: dict[str, dict] = {}
+    master = spark.sparkContext.master
+    # Freshly-probed rows override; untouched FRESH prior rows carry
+    # over verbatim (their probed_at and corpus stay honest).
+    merged = dict(prior)
 
     def stamp() -> str:
         return datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ")
 
     def record(name, span, ts, raw, exp):
         verdict = "SUPER-LINEAR" if exp > SUPERLINEAR else "ok"
-        rows[name] = {
+        merged[name] = {
             "name": name,
             "span": span,
             "ts": ", ".join(f"{k}:{v:.2f}" for k, v in ts.items()),
@@ -736,7 +786,9 @@ def main() -> int:
             "exp": f"{exp:.2f}",
             "verdict": verdict,
             "probed_at": stamp(),
+            "corpus": digest,
         }
+        write_scaling(merged, master)
         print(f"{name:34s} {span:14s} raw={raw:5.2f} exp={exp:5.2f} {verdict}")
 
     copies = COPIES[:2] if quick else COPIES
@@ -785,41 +837,7 @@ def main() -> int:
         )
         record(name, "sf0.01->sf0.1", ts, raw, exp)
 
-    # Merge: freshly-probed rows override; untouched FRESH prior rows
-    # carry over verbatim (their probed_at stays honest).
-    merged = dict(prior)
-    merged.update(rows)
-    order = [n for n in (*DOC_QUERIES, *EMB_QUERIES, *SF_QUERIES) if n in merged]
-
-    lines = [
-        "# SCALING — measured runtime-vs-corpus-size exponents",
-        "",
-        "Generated by `tools/scale_probe.py` on local[32]. Exponent =",
-        "log(time ratio)/log(data ratio) between the two largest sizes,",
-        "after a warm-up run (session/codegen cost excluded). ~1.0 =",
-        "linear; > 1.35 flagged SUPER-LINEAR; < 1 = fixed cost still",
-        "dominates at these sizes. Amplified corpora keep duplicate",
-        "density constant (copies are mutually non-duplicate), so the",
-        "dedup/LSH exponents measure the algorithm, not pair blow-up.",
-        "Adjudication is SYMMETRIC: the top two sizes are always timed",
-        "twice and the per-size MIN used; `exp_raw` is the first-run",
-        "estimate (kept so the adjudication itself is auditable) and",
-        "`exponent` the adjudicated value the verdict uses. Each row",
-        "carries the UTC time it was probed; rows older than the",
-        "current testdata are STALE and re-probed by",
-        "`scale_probe.py --refresh-stale` (tests/test_tools.py asserts",
-        "none are committed stale).",
-        "",
-        "| query | sizes | times (s) | exp_raw | exponent | verdict | probed_at |",
-        "|---|---|---|---|---|---|---|",
-    ]
-    n_super = 0
-    for name in order:
-        row = merged[name]
-        n_super += row["verdict"].strip() != "ok"
-        lines.append(_fmt_row(row))
-    with open(SCALING_PATH, "w") as f:
-        f.write("\n".join(lines) + "\n")
+    n_super = write_scaling(merged, master)
     print(f"\nSCALING.md written; super-linear: {n_super}")
     spark.stop()
     return 1 if n_super else 0
