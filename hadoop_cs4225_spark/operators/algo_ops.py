@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from hadoop_cs4225_spark.functions.hashing import hash60_sql
 from hadoop_cs4225_spark.functions.numeric import quant, quant_sql
 from hadoop_cs4225_spark.registry import register
+from hadoop_cs4225_spark.sources.sinks import session_memo
 from hadoop_cs4225_spark.sources.tables import load_events, load_table
 
 #: Skyline price-bucket width (dollars). Bucket count is bounded by
@@ -91,73 +92,57 @@ def _pearson_sql(scale: int = 6) -> str:
 _MAD_K = 3
 
 
+@session_memo("events_daily_counts", sources=("events",))
 def _daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, day, cnt) daily rollup shared by the CUSUM, ACF
-    and Theil-Sen queries — session-memoized + localCheckpointed
-    (the dedup ``_memo`` discipline, mtime-invalidated) so the events
+    and Theil-Sen queries — a session memo, so the events
     scan + rollup shuffle runs once per session, not once per query."""
-    from hadoop_cs4225_spark.operators.dedup import _memo
-
-    def build() -> DataFrame:
-        return (
-            load_events(spark, sf_dir)
-            .groupBy(
-                "event_type",
-                F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias(
-                    "day"
-                ),
-            )
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .localCheckpoint(eager=False)
+    return (
+        load_events(spark, sf_dir)
+        .groupBy(
+            "event_type",
+            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias(
+                "day"
+            ),
         )
-
-    return _memo(spark, sf_dir, "events_daily_counts", build, src_table="events")
-
-
-def _orders_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(day, x) daily order-count series shared by the periodogram,
-    spectral-entropy, AR(2)/Yule-Walker and Mann-Kendall queries —
-    session-memoized + localCheckpointed (the ``_daily_counts``
-    discipline) so the orders scan + calendar rollup runs once per
-    session, not once per spectral/trend query."""
-    from hadoop_cs4225_spark.operators.dedup import _memo
-
-    def build() -> DataFrame:
-        return (
-            load_table(spark, sf_dir, "orders")
-            .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-            .agg(F.count(F.lit(1)).cast("long").alias("x"))
-            .localCheckpoint(eager=False)
-        )
-
-    return _memo(
-        spark, sf_dir, "orders_daily_counts", build, src_table="orders"
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .localCheckpoint(eager=False)
     )
 
 
+@session_memo("orders_daily_counts", sources=("orders",))
+def _orders_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(day, x) daily order-count series shared by the periodogram,
+    spectral-entropy, AR(2)/Yule-Walker and Mann-Kendall queries —
+    a session memo, so the orders scan + calendar rollup runs once per
+    session, not once per spectral/trend query."""
+    return (
+        load_table(spark, sf_dir, "orders")
+        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
+        .agg(F.count(F.lit(1)).cast("long").alias("x"))
+        .localCheckpoint(eager=False)
+    )
+
+
+@session_memo("event_transitions", sources=("events",))
 def _transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(cur, nxt, c) next-event transition counts shared by the Markov
-    accuracy and entropy-rate queries (same memo discipline — the
+    accuracy and entropy-rate queries (a session memo — the
     per-user LEAD window over the fact table runs once per session)."""
-    from hadoop_cs4225_spark.operators.dedup import _memo
-
-    def build() -> DataFrame:
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        seq = (
-            load_events(spark, sf_dir)
-            .select(
-                F.col("event_type").alias("cur"),
-                F.lead("event_type").over(w).alias("nxt"),
-            )
-            .filter(F.col("nxt").isNotNull())
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = (
+        load_events(spark, sf_dir)
+        .select(
+            F.col("event_type").alias("cur"),
+            F.lead("event_type").over(w).alias("nxt"),
         )
-        return (
-            seq.groupBy("cur", "nxt")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .localCheckpoint(eager=False)
-        )
-
-    return _memo(spark, sf_dir, "event_transitions", build, src_table="events")
+        .filter(F.col("nxt").isNotNull())
+    )
+    return (
+        seq.groupBy("cur", "nxt")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .localCheckpoint(eager=False)
+    )
 
 
 @register(
@@ -6759,6 +6744,7 @@ _KM_HORIZON = 60
 _KM_GRID = 1_000_000_000_000
 
 
+@session_memo("order_ship_durs", sources=("orders", "lineitem"))
 def _order_ship_durs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-order ship delay ``(o_custkey, o_orderpriority, dur)`` with
     ``dur = datediff(first_ship, o_orderdate)`` (raw, unclamped) —
@@ -6767,32 +6753,24 @@ def _order_ship_durs(spark: SparkSession, sf_dir: str) -> DataFrame:
     KM, log-rank) each re-ran the orders⋈lineitem fact-fact join +
     per-order MIN to derive this identical frame (~4 s of the
     suite's logrank row alone); one localCheckpointed build now feeds
-    them all — the ``_daily_counts`` discipline. One row per order, so
+    them all as a session memo. One row per order, so
     the checkpoint is fact-bounded, and each consumer's
     clamp/censor/dimension join stays its own (the oracles keep the
     inline CTE chain: build and probe are one logical definition)."""
-    from hadoop_cs4225_spark.operators.dedup import _memo
-
-    def build() -> DataFrame:
-        orders = load_table(spark, sf_dir, "orders")
-        lineitem = load_table(spark, sf_dir, "lineitem")
-        return (
-            orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
-            .groupBy("o_orderkey", "o_custkey", "o_orderpriority", "o_orderdate")
-            .agg(F.min(F.col("l_shipdate").cast("date")).alias("first_ship"))
-            .select(
-                "o_custkey",
-                "o_orderpriority",
-                F.datediff(
-                    "first_ship", F.col("o_orderdate").cast("date")
-                ).alias("dur"),
-            )
-            .localCheckpoint(eager=False)
+    orders = load_table(spark, sf_dir, "orders")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    return (
+        orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
+        .groupBy("o_orderkey", "o_custkey", "o_orderpriority", "o_orderdate")
+        .agg(F.min(F.col("l_shipdate").cast("date")).alias("first_ship"))
+        .select(
+            "o_custkey",
+            "o_orderpriority",
+            F.datediff(
+                "first_ship", F.col("o_orderdate").cast("date")
+            ).alias("dur"),
         )
-
-    return _memo(
-        spark, sf_dir, "order_ship_durs", build,
-        src_table=("orders", "lineitem"),
+        .localCheckpoint(eager=False)
     )
 
 

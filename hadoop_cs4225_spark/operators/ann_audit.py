@@ -109,7 +109,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bbest = F.broadcast(brute.agg(F.max("bcos").alias("bc")))
     # memoized 5-row method results, shared with ann_ndcg_audit (the
-    # _brute_topk_frame discipline — see similarity.method_topk_frame)
+    # _brute_topk_frame discipline — see similarity.AUDIT_METHODS)
     cand: DataFrame | None = None
     for label, frame in sorted(audit_method_frames(spark, sf_dir).items()):
         part = frame.select(

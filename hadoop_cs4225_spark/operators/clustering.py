@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from hadoop_cs4225_spark.functions.numeric import quant, quant_sql
 from hadoop_cs4225_spark.registry import register
+from hadoop_cs4225_spark.sources.sinks import session_memo
 from hadoop_cs4225_spark.sources.tables import load_table
 
 #: Cluster count. The argmin composite key packs the cluster id into
@@ -142,79 +143,67 @@ def _assign(ql: DataFrame, cent: DataFrame) -> DataFrame:
     ).select("vec_id", (F.col("mk") % 8).cast("int").alias("cid"))
 
 
+@session_memo("kmeans_cent", sources=("embeddings",))
 def _kmeans_cent_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FINAL centroids ``(cid, i, m)`` after the two Lloyd updates —
-    session-memoized + localCheckpointed (the dedup ``_memo``
-    discipline) because BOTH registered k-means queries consume the
+    a session memo because BOTH registered k-means queries consume the
     identical fixpoint and each previously re-ran the whole 5-step
     iteration (guide §2.4). Bounded: k·d = 256 short rows at any corpus
-    size. Warmed by ``registry.warm_shared_frames``."""
-    from hadoop_cs4225_spark.operators.dedup import _memo
-
-    def build() -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings")
-        qv = emb.select(
-            "vec_id",
-            F.transform(
-                "embedding",
-                lambda x: F.floor(x.cast("double") * _GRID + 0.5).cast(
-                    "long"
-                ),
-            ).alias("q"),
+    size."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    qv = emb.select(
+        "vec_id",
+        F.transform(
+            "embedding",
+            lambda x: F.floor(x.cast("double") * _GRID + 0.5).cast(
+                "long"
+            ),
+        ).alias("q"),
+    )
+    ql = _ql_frame(spark, sf_dir)
+    # deterministic seeds: the k smallest vec_ids, cid by that
+    # order. The row_number window runs over the ALREADY-LIMITed
+    # k-row frame (bounded; allowlisted in test_plans.py).
+    seeds = (
+        qv.orderBy("vec_id")
+        .limit(_K)
+        .withColumn(
+            "cid",
+            (F.row_number().over(Window.orderBy("vec_id")) - 1).cast(
+                "int"
+            ),
         )
-        ql = _ql_frame(spark, sf_dir)
-        # deterministic seeds: the k smallest vec_ids, cid by that
-        # order. The row_number window runs over the ALREADY-LIMITed
-        # k-row frame (bounded; allowlisted in test_plans.py).
-        seeds = (
-            qv.orderBy("vec_id")
-            .limit(_K)
-            .withColumn(
-                "cid",
-                (F.row_number().over(Window.orderBy("vec_id")) - 1).cast(
-                    "int"
-                ),
-            )
-        )
-        cent = seeds.select(
-            "cid", F.posexplode("q").alias("i0", "m")
-        ).select("cid", (F.col("i0") + 1).alias("i"), "m")
+    )
+    cent = seeds.select(
+        "cid", F.posexplode("q").alias("i0", "m")
+    ).select("cid", (F.col("i0") + 1).alias("i"), "m")
 
-        def update(asg: DataFrame) -> DataFrame:
-            return (
-                ql.join(asg, "vec_id")
-                .groupBy("cid", "i")
-                .agg(
-                    F.floor(
-                        F.sum("v").cast("double") / F.count(F.lit(1)) + 0.5
-                    )
-                    .cast("long")
-                    .alias("m")
+    def update(asg: DataFrame) -> DataFrame:
+        return (
+            ql.join(asg, "vec_id")
+            .groupBy("cid", "i")
+            .agg(
+                F.floor(
+                    F.sum("v").cast("double") / F.count(F.lit(1)) + 0.5
                 )
+                .cast("long")
+                .alias("m")
             )
+        )
 
-        for _ in range(2):
-            cent = update(_assign(ql, cent))
-        return cent.localCheckpoint(eager=False)
-
-    return _memo(spark, sf_dir, "kmeans_cent", build, src_table="embeddings")
+    for _ in range(2):
+        cent = update(_assign(ql, cent))
+    return cent.localCheckpoint(eager=False)
 
 
+@session_memo("kmeans_assign", sources=("embeddings",), upstream=("kmeans_cent",))
 def _kmeans_assign_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FINAL assignment ``(vec_id, cid)`` against the memoized final
     centroids — the other half of the shared fixpoint (one short row
     per vector, the ``_assigned_frame`` bound)."""
-    from hadoop_cs4225_spark.operators.dedup import _memo
-
-    return _memo(
-        spark,
-        sf_dir,
-        "kmeans_assign",
-        lambda: _assign(
-            _ql_frame(spark, sf_dir), _kmeans_cent_frame(spark, sf_dir)
-        ).localCheckpoint(eager=False),
-        src_table="embeddings",
-    )
+    return _assign(
+        _ql_frame(spark, sf_dir), _kmeans_cent_frame(spark, sf_dir)
+    ).localCheckpoint(eager=False)
 
 
 def _kmeans_frames(

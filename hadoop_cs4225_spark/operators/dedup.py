@@ -29,117 +29,10 @@ from hadoop_cs4225_spark.functions.hashing import (
 from hadoop_cs4225_spark.functions.numeric import quant, quant_sql
 from hadoop_cs4225_spark.operators.wordcount import TOKEN_DELIM_RE
 from hadoop_cs4225_spark.registry import register
-from hadoop_cs4225_spark.sources.sinks import derived_layout, read_derived
+from hadoop_cs4225_spark.sources.sinks import derived_layout, read_derived, session_memo
 from hadoop_cs4225_spark.sources.tables import load_table
 
 _TOKS_SQL = "list_filter(string_split_regex(text, '[ \\t\\n\\r\\f]+'), x -> x <> '')"
-
-#: Session-scoped materialized intermediates. The LSH family is a
-#: PIPELINE — verified pairs feed cluster labels feed the canonical
-#: keep decision — but each stage is independently driver-callable, so
-#: without sharing, every downstream query re-runs the whole upstream
-#: (three full LSH pipelines per suite run; measured ~9 s of the bench
-#: at sf0.1). Entries are localCheckpointed frames of one short row per
-#: pair/doc (bounded), keyed by Spark applicationId so a fresh session
-#: never sees another session's checkpointed RDDs, and by the source
-#: parquet's mtime so in-session regeneration of the testdata
-#: auto-invalidates (same discipline as the derived layouts'
-#: ``sinks.ensure``). On a real cluster the same role is played
-#: by writing the pairs/labels tables once and reading them downstream.
-_MATERIALIZED: dict[tuple[str, str, str, float], DataFrame] = {}
-
-
-def _memo(
-    spark: SparkSession,
-    sf_dir: str,
-    kind: str,
-    build,
-    src_table: str | tuple[str, ...] = "documents",
-    extra_paths: tuple[str, ...] = (),
-) -> DataFrame:
-    """``build`` must return an already-MATERIALIZED frame (its last op
-    a ``localCheckpoint``, or a projection over one) — the memo stores
-    it verbatim. Entries keyed under a different applicationId belong
-    to a stopped SparkContext (their checkpointed RDDs are dead); they
-    are evicted on insert so a session-restarting process never grows
-    the dict nor retains dead object graphs. ``src_table`` names the
-    parquet whose mtime keys staleness — a TUPLE when the frame scans
-    several tables (staleness = max mtime over all of them, so
-    regenerating ANY source invalidates the memo; the similarity
-    family shares this memo with ``src_table="embeddings"``; ``kind``
-    strings are namespaced per family). ``extra_paths`` (ADVICE r13):
-    absolute file paths — e.g. a derived layout's ``_DERIVED_CONFIG``
-    — whose mtimes also fold into the staleness key, for frames built
-    FROM written indexes that can be rebuilt in-session without the
-    source parquet moving (a definition/config change).
-
-    Storage budget (VERDICT r13 task 8): most memo frames are bounded
-    (k·d centroids, pair caps, domain grids), but three are LINEAR in
-    the corpus — ``kmeans_assign`` (one short row per vector),
-    ``trade_edges``/``trade_edges_deg`` (one row per graph edge, edge
-    count bounded by lineitem rows) and ``blm_doc_scores`` (one 3-long
-    row per document) — each ~1e-3..1e-4 of corpus bytes. They are
-    localCheckpointed, which stores blocks MEMORY_AND_DISK (Spark's
-    local-checkpoint default level): under executor memory pressure
-    the blocks spill to local disk rather than evict, so the commitment
-    is disk-bounded, not heap-bounded. They survive ``clearCache()`` by
-    design (shared across queries for the session lifetime); a consumer
-    that needs to free one explicitly evicts it with
-    :func:`evict_memo`, after which the next call rebuilds it — the
-    recompute path is pinned in tests/test_r14_opt.py."""
-    import os
-
-    app = spark.sparkContext.applicationId
-    tables = (src_table,) if isinstance(src_table, str) else tuple(src_table)
-    mtime = max(
-        (
-            os.path.getmtime(p)
-            for p in (
-                *(os.path.join(sf_dir, f"{t}.parquet") for t in tables),
-                *extra_paths,
-            )
-            if os.path.exists(p)
-        ),
-        default=0.0,
-    )
-    key = (app, os.path.normpath(sf_dir), kind, mtime)
-    df = _MATERIALIZED.get(key)
-    if df is None:
-        # Evict (a) entries from stopped SparkContexts (dead RDDs) and
-        # (b) same-app entries for this (sf_dir, kind) with a DIFFERENT
-        # mtime — in-session testdata regeneration would otherwise pin
-        # the old localCheckpointed frame for the session's lifetime.
-        for stale in [
-            k
-            for k in _MATERIALIZED
-            if k[0] != app or (k[1:3] == key[1:3] and k[3] != mtime)
-        ]:
-            del _MATERIALIZED[stale]
-        df = build()
-        _MATERIALIZED[key] = df
-    return df
-
-
-def evict_memo(spark: SparkSession, sf_dir: str, kind: str) -> bool:
-    """Drop a session memo so the next consumer rebuilds it — the
-    eviction half of the memo storage policy (VERDICT r13 task 8: the
-    linear-in-corpus memos are a real storage commitment at 100 TB and
-    need an eviction path beyond source-mtime change). Returns True if
-    an entry was dropped. The checkpointed blocks themselves are freed
-    when the frame's RDD is garbage-collected after the dict reference
-    goes away (ContextCleaner), the same lifecycle as a stale-mtime
-    eviction."""
-    app = spark.sparkContext.applicationId
-    import os as _os
-
-    norm = _os.path.normpath(sf_dir)
-    doomed = [
-        k for k in _MATERIALIZED if k[0] == app and k[1] == norm and k[2] == kind
-    ]
-    for k in doomed:
-        del _MATERIALIZED[k]
-    return bool(doomed)
-
 
 #: Number of MinHash permutations (1-row bands → 4 LSH bands).
 N_PERMS = 4
@@ -394,15 +287,12 @@ def minhash_lsh_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates. The band join keys the shuffle on (band, hash) buckets —
     the 100 TB-safe plan (never all-pairs).
 
-    The verified pair set is a shared materialized intermediate (see
-    ``_MATERIALIZED``): ``dedup_clusters`` and ``dedup_canonical_keep``
-    consume it downstream, and the memo means the LSH pipeline runs once
-    per (session, sf) however many of the three queries run.
+    The verified pair set is the ``lsh_pairs`` session memo:
+    ``dedup_clusters`` and ``dedup_canonical_keep`` consume it
+    downstream, and the memo means the LSH pipeline runs once per
+    (session, sf) however many of the three queries run.
     """
-    return (
-        _memo(spark, sf_dir, "lsh_pairs", lambda: _verified_pairs(spark, sf_dir))
-        .orderBy(F.desc("jaccard"), "d1", "d2")
-    )
+    return _verified_pairs(spark, sf_dir).orderBy(F.desc("jaccard"), "d1", "d2")
 
 
 @derived_layout(
@@ -586,8 +476,13 @@ def _sig_index_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_derived(spark, ensure_minhash_sig_index(spark, sf_dir))
 
 
+@session_memo(
+    "lsh_pairs", layouts=("documents_minhash_sigs", "documents_shingle_sets")
+)
 def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unordered verified near-dup pairs ``(d1, d2, jaccard)``.
+    """Unordered verified near-dup pairs ``(d1, d2, jaccard)``, the
+    session memo the whole LSH family shares: the pipeline feeds cluster
+    labels, keep decisions and the audits.
 
     Signatures come from the MATERIALIZED index
     (:func:`ensure_minhash_sig_index`) and the exact-Jaccard verify
@@ -649,9 +544,7 @@ def _verified_pairs_body(d: DataFrame, sig_index: DataFrame) -> DataFrame:
         .join(s2, "d2")
         .where(jac >= 0.05)
         .select("d1", "d2", quant(jac, 6).alias("jaccard"))
-        # Materialize eagerly (the _memo contract); the caller's
-        # try/finally then releases the shingle-set cache — after the
-        # checkpoint the persisted frame is dead weight.
+        # Materialize eagerly: the session memo stores it verbatim.
         .localCheckpoint()
     )
 
@@ -875,19 +768,14 @@ def _lsh_pairs_cte(with_jaccard: bool = False) -> str:
 )"""
 
 
+@session_memo("cluster_labels", upstream=("lsh_pairs",))
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-component labels (doc_id -> min-reachable doc_id) over
     the verified MinHash-LSH pair graph — shared by ``dedup_clusters``
-    and ``dedup_canonical_keep`` through the ``_MATERIALIZED`` memo (the
+    and ``dedup_canonical_keep`` through the ``cluster_labels`` memo (the
     label-propagation loop runs once per session however many consumers
     run). Iteration hygiene documented on ``dedup_clusters``."""
-    return _memo(spark, sf_dir, "cluster_labels", lambda: _labels_fixpoint(spark, sf_dir))
-
-
-def _labels_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _memo(
-        spark, sf_dir, "lsh_pairs", lambda: _verified_pairs(spark, sf_dir)
-    ).select("d1", "d2")
+    pairs = _verified_pairs(spark, sf_dir).select("d1", "d2")
     edges = pairs.union(pairs.select(F.col("d2"), F.col("d1"))).toDF("a", "b")
     labels = (
         edges.select(F.col("a").alias("doc_id"))
@@ -1099,8 +987,7 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (b) capped buckets. Plan: the exact pair intersections come from a
     shingle-keyed equi-join over the SLICED written postings index
     (only co-occurring pairs are ever materialized — r14); the LSH
-    side reuses the session's materialized verified-pair frame
-    (``_MATERIALIZED``) — at 100 TB this audit is a sampled
+    side reuses the session's ``lsh_pairs`` memo — at 100 TB this audit is a sampled
     side-channel, never a full-corpus job.
     """
     # Ground truth via the written POSTINGS index, sliced (VERDICT r13
@@ -1136,7 +1023,7 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(inter / union >= 0.05)
         .agg(F.count(F.lit(1)).alias("n_true"))
     )
-    lsh = _memo(spark, sf_dir, "lsh_pairs", lambda: _verified_pairs(spark, sf_dir))
+    lsh = _verified_pairs(spark, sf_dir)
     l = lsh.where(
         (F.col("d1") <= AUDIT_SLICE) & (F.col("d2") <= AUDIT_SLICE)
     ).agg(F.count(F.lit(1)).alias("n_lsh"))
@@ -1376,8 +1263,8 @@ def source_dup_cross_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`dedup_clusters`, `dedup_cluster_size_histogram`) can't show.
 
     Plan: consumes the session-memoized verified pair frame (the LSH
-    pipeline runs ONCE however many dedup queries execute — see
-    ``_MATERIALIZED``), joins the two doc sides to their sources
+    pipeline runs ONCE however many dedup queries execute — the
+    ``lsh_pairs`` memo), joins the two doc sides to their sources
     (pair-set-sized shuffles, tiny after verification), normalizes the
     pair with least/greatest so (a,b) and (b,a) land in one cell, and
     reduces to at most |sources|^2/2 rows.
@@ -1387,7 +1274,7 @@ def source_dup_cross_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is that idea lifted to near-dup pairs. Cited:
     ``TopkCommonWords.java:100-140``.
     """
-    pairs = _memo(spark, sf_dir, "lsh_pairs", lambda: _verified_pairs(spark, sf_dir))
+    pairs = _verified_pairs(spark, sf_dir)
     src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     s1 = src.select(F.col("doc_id").alias("d1"), F.col("source").alias("src1"))
     s2 = src.select(F.col("doc_id").alias("d2"), F.col("source").alias("src2"))
@@ -1709,9 +1596,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     No reference analogue; extends the SURVEY §2 dedup family.
     """
-    pairs = _memo(
-        spark, sf_dir, "lsh_pairs", lambda: _verified_pairs(spark, sf_dir)
-    )
+    pairs = _verified_pairs(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     is_train = (
         hash60(F.col("doc_id").cast("string")) % 100 < _LEAK_TRAIN_PCT
@@ -1818,9 +1703,7 @@ def dedup_methods_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     No reference analogue; extends the SURVEY §2 dedup family.
     """
     docs = load_table(spark, sf_dir, "documents")
-    lsh = _memo(
-        spark, sf_dir, "lsh_pairs", lambda: _verified_pairs(spark, sf_dir)
-    ).select("d1", "d2")
+    lsh = _verified_pairs(spark, sf_dir).select("d1", "d2")
     groups = (
         docs.select(F.md5("text").alias("h"), "doc_id")
         .groupBy("h")
@@ -2668,9 +2551,7 @@ def newcrawl_near_dup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     No reference analogue; extends the SURVEY §2 dedup family (r13).
     """
-    pairs = _memo(
-        spark, sf_dir, "lsh_pairs", lambda: _verified_pairs(spark, sf_dir)
-    )
+    pairs = _verified_pairs(spark, sf_dir)
     src = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", src_no_col().alias("src_no")
     )
@@ -2770,9 +2651,7 @@ def minhash_estimate_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer grid (exact-sum discipline: both engines sum identical
     BIGINTs, one final division), so cross-engine parity is exact.
     """
-    pairs = _memo(
-        spark, sf_dir, "lsh_pairs", lambda: _verified_pairs(spark, sf_dir)
-    )
+    pairs = _verified_pairs(spark, sf_dir)
     sigs = _sig_index_frame(spark, sf_dir)
     s1 = sigs.select(
         F.col("doc_id").alias("d1"),

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from hadoop_cs4225_spark.functions.numeric import quant, quant_sql
 from hadoop_cs4225_spark.registry import register
+from hadoop_cs4225_spark.sources.sinks import session_memo
 from hadoop_cs4225_spark.sources.tables import load_table
 
 #: Damping factor (the standard 0.85) and fixed iteration count. Both
@@ -91,58 +92,48 @@ def _iter_sql(prev: str, cur: str, materialized: bool = False) -> str:
 
 
 
+@session_memo("trade_edges", sources=("orders", "lineitem"))
 def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetrized customer↔supplier edge list (src, dst) — session-
-    memoized (the dedup ``_memo`` discipline) because BOTH PageRank
-    variants (global and personalized) iterate over the identical
+    memoized because BOTH PageRank variants (global and personalized)
+    iterate over the identical
     frame: the orders⋈lineitem→distinct chain runs once per session,
     not once per query. localCheckpoint stands in for the written
     edge table a cluster deployment would persist."""
-    from hadoop_cs4225_spark.operators.dedup import _memo
-
-    def build() -> DataFrame:
-        orders = load_table(spark, sf_dir, "orders")
-        lineitem = load_table(spark, sf_dir, "lineitem")
-        pairs = (
-            orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
-            .select(
-                (F.col("o_custkey") * 2).alias("c"),
-                (F.col("l_suppkey") * 2 + 1).alias("s"),
-            )
-            .distinct()
+    orders = load_table(spark, sf_dir, "orders")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    pairs = (
+        orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
+        .select(
+            (F.col("o_custkey") * 2).alias("c"),
+            (F.col("l_suppkey") * 2 + 1).alias("s"),
         )
-        return (
-            pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-            .union(
-                pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-            )
-            .localCheckpoint(eager=False)
+        .distinct()
+    )
+    return (
+        pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
+        .union(
+            pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
         )
-
-    return _memo(
-        spark, sf_dir, "trade_edges", build, src_table=("orders", "lineitem")
+        .localCheckpoint(eager=False)
     )
 
 
+@session_memo("trade_deg", upstream=("trade_edges",))
 def _trade_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Out-degree table ``(src, d)`` of the symmetrized trade graph —
     session-memoized (r13 optimization round): BOTH PageRank variants
     derive it per run, and the global query additionally re-derived it
     inside every iteration's plan. Bounded: |V| short rows."""
-    from hadoop_cs4225_spark.operators.dedup import _memo
-
-    return _memo(
-        spark,
-        sf_dir,
-        "trade_deg",
-        lambda: _trade_edges(spark, sf_dir)
+    return (
+        _trade_edges(spark, sf_dir)
         .groupBy("src")
         .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=False),
-        src_table=("orders", "lineitem"),
+        .localCheckpoint(eager=False)
     )
 
 
+@session_memo("trade_edges_deg", upstream=("trade_edges", "trade_deg"))
 def _trade_edges_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree-annotated edge list ``(src, dst, d)`` — the frame every
     damped power-iteration round actually joins against ranks. Both
@@ -150,43 +141,31 @@ def _trade_edges_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ITERATION (3x each per run — guide §2.4); memoized it is one build
     per session. Bounded: |E| short rows, same class as the memoized
     ``_trade_edges`` it annotates."""
-    from hadoop_cs4225_spark.operators.dedup import _memo
-
-    return _memo(
-        spark,
-        sf_dir,
-        "trade_edges_deg",
-        lambda: _trade_edges(spark, sf_dir)
+    return (
+        _trade_edges(spark, sf_dir)
         .join(_trade_deg(spark, sf_dir), "src")
         .select("src", "dst", "d")
-        .localCheckpoint(eager=False),
-        src_table=("orders", "lineitem"),
+        .localCheckpoint(eager=False)
     )
 
 
+@session_memo("hits_pairs", sources=("orders", "lineitem"))
 def _hits_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct bipartite customer→supplier edge list (c, s) — session-
     memoized like :func:`_trade_edges` (VERDICT r12 task 3): HITS's six
     half-rounds all read this one frame, and it was the only iterative-
-    graph input not in ``registry.warm_shared_frames``, so the bench
+    graph input not warmed, so the bench
     charged the orders⋈lineitem→distinct build to ``supplier_hits_scores``
     every run."""
-    from hadoop_cs4225_spark.operators.dedup import _memo
-
-    def build() -> DataFrame:
-        orders = load_table(spark, sf_dir, "orders")
-        li = load_table(spark, sf_dir, "lineitem")
-        return (
-            orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-            .select(
-                F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s")
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    return (
+        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
+        .select(
+            F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s")
         )
-
-    return _memo(
-        spark, sf_dir, "hits_pairs", build, src_table=("orders", "lineitem")
+        .distinct()
+        .localCheckpoint(eager=False)
     )
 
 
@@ -325,24 +304,12 @@ _EDGES_CTE_SQL = f"""pairs AS (
 )"""
 
 
+@session_memo("mutual_topk_edges", sources=("lineitem",))
 def _mutual_topk_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected mutual-top-K co-supply edges (a < b), degree <= K by
-    construction; localCheckpointed AND session-memoized (the dedup
-    `_memo` discipline, mtime-invalidated) because BOTH graph queries
-    and all their consumers read the identical frame — the pair
-    self-join runs once per session, not once per query."""
-    from hadoop_cs4225_spark.operators.dedup import _memo
-
-    return _memo(
-        spark,
-        sf_dir,
-        "mutual_topk_edges",
-        lambda: _build_mutual_topk_edges(spark, sf_dir),
-        src_table="lineitem",
-    )
-
-
-def _build_mutual_topk_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    construction; a session memo because BOTH graph queries and all
+    their consumers read the identical frame — the pair self-join runs
+    once per session, not once per query."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     os_ = li.distinct()
     a, b = os_.alias("a"), os_.alias("b")
@@ -785,8 +752,8 @@ def supplier_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     No reference analogue; extends the SURVEY §2 graph family.
     """
-    # session-memoized + checkpointed: read by all 6 half-rounds and
-    # warmed by registry.warm_shared_frames (VERDICT r12 task 3)
+    # a warmed session memo: read by all 6 half-rounds (VERDICT r12
+    # task 3)
     pairs = _hits_pairs(spark, sf_dir)
     h = pairs.select("c").distinct().withColumn("v", F.lit(1.0))
 

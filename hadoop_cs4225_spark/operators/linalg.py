@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from hadoop_cs4225_spark.functions.numeric import quant, quant_sql
 from hadoop_cs4225_spark.registry import register
+from hadoop_cs4225_spark.sources.sinks import session_memo
 from hadoop_cs4225_spark.sources.tables import load_table
 
 #: Power-iteration steps (unrolled identically in the SQL oracle).
@@ -47,37 +48,31 @@ def _vec_w():
     return Window.partitionBy()
 
 
+@session_memo("gram64", sources=("embeddings",))
 def _gram_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 64x64 Gram matrix ``(i, j, g)`` with ``g = ROUND(Σ xi·xj, 4)``
-    — session-memoized + localCheckpointed (the dedup ``_memo``
-    discipline) because BOTH linear-algebra queries
+    — a session memo because BOTH linear-algebra queries
     (``embedding_gram_topeig``, ``embedding_pca_two``) consume the
     identical frame: the ONE corpus-sized aggregate of the family ran
     twice per suite (guide §2.4 — remove repeated passes). Bounded:
-    d² = 4096 short rows regardless of corpus size. Warmed by
-    ``registry.warm_shared_frames`` so no timed query is charged the
-    family's build for running first."""
-    from hadoop_cs4225_spark.operators.dedup import _memo
-
-    def build() -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings")
-        as_double = F.transform("embedding", lambda x: x.cast("double"))
-        ex = emb.select(
-            F.posexplode(as_double).alias("p", "xi"), as_double.alias("emb")
+    d² = 4096 short rows regardless of corpus size. Warmed, so no timed
+    query is charged the family's build for running first."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    as_double = F.transform("embedding", lambda x: x.cast("double"))
+    ex = emb.select(
+        F.posexplode(as_double).alias("p", "xi"), as_double.alias("emb")
+    )
+    return (
+        ex.select(
+            (F.col("p") + 1).cast("int").alias("i"),
+            F.posexplode("emb").alias("q", "xj"),
+            "xi",
         )
-        return (
-            ex.select(
-                (F.col("p") + 1).cast("int").alias("i"),
-                F.posexplode("emb").alias("q", "xj"),
-                "xi",
-            )
-            .select("i", (F.col("q") + 1).cast("int").alias("j"), "xi", "xj")
-            .groupBy("i", "j")
-            .agg(F.round(F.sum(F.col("xi") * F.col("xj")), 4).alias("g"))
-            .localCheckpoint()
-        )
-
-    return _memo(spark, sf_dir, "gram64", build, src_table="embeddings")
+        .select("i", (F.col("q") + 1).cast("int").alias("j"), "xi", "xj")
+        .groupBy("i", "j")
+        .agg(F.round(F.sum(F.col("xi") * F.col("xj")), 4).alias("g"))
+        .localCheckpoint()
+    )
 
 
 def _gram_sql() -> str:

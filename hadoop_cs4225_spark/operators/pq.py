@@ -406,8 +406,8 @@ def ensure_ivf_pq_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     probe neither rescans raw vectors for assignment nor recomputes
     codes. Its fingerprint covers the subspace geometry and a digest of
     the centroid and codebook values, so a change to any of them
-    rebuilds the index (and, through the fingerprint file's mtime,
-    ``similarity.method_topk_frame``'s memos)."""
+    rebuilds the index (and, through the fingerprint file's mtime, every
+    session memo that declares the layout)."""
     from hadoop_cs4225_spark.operators.similarity import _ivf_assign_col
 
     (

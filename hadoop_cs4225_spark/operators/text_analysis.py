@@ -29,7 +29,7 @@ from hadoop_cs4225_spark.operators.dedup import (
 )
 from hadoop_cs4225_spark.operators.wordcount import TOKEN_DELIM_RE
 from hadoop_cs4225_spark.registry import register
-from hadoop_cs4225_spark.sources.sinks import derived_layout, read_derived
+from hadoop_cs4225_spark.sources.sinks import derived_layout, read_derived, session_memo
 from hadoop_cs4225_spark.sources.tables import load_table
 
 #: Marker words per language for the n-gram/stopword language-ID
@@ -1973,31 +1973,27 @@ def _bigram_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_memo("blm_doc_scores", sources=("documents",))
 def _bigram_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc bigram-LM score sums ``(doc_id, n, s)`` — n bigrams and
-    the BIGINT sum of the 1e-9-nat grid terms — session-memoized (the
-    dedup ``_memo`` discipline, r13 optimization round): all THREE
-    consumers of :func:`_bigram_terms` (``doc_bigram_logprob``,
-    ``source_bigram_perplexity``, ``doc_fluency_outlier_gate``) reduce
-    the term stream to exactly these per-doc integer sums, and each
+    the BIGINT sum of the 1e-9-nat grid terms — a session memo (r13
+    optimization round): all THREE consumers of :func:`_bigram_terms`
+    (``doc_bigram_logprob``, ``source_bigram_perplexity``,
+    ``doc_fluency_outlier_gate``) reduce the term stream to exactly
+    these per-doc integer sums, and each
     previously re-ran the whole LM pipeline (bigram explode + two count
     shuffles + two joins) per run (guide §2.4). Integer grid sums are
     order-free, so every downstream roll-up (per-source sums = sums of
     per-doc sums) is bit-identical to the inline formulation. Bounded:
-    one short row per doc. Warmed by ``registry.warm_shared_frames``."""
-    from hadoop_cs4225_spark.operators.dedup import _memo
-
-    return _memo(
-        spark,
-        sf_dir,
-        "blm_doc_scores",
-        lambda: _bigram_terms(spark, sf_dir)
+    one short row per doc."""
+    return (
+        _bigram_terms(spark, sf_dir)
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum("t_s").cast("long").alias("s"),
         )
-        .localCheckpoint(eager=False),
+        .localCheckpoint(eager=False)
     )
 
 
@@ -5402,19 +5398,16 @@ def dup_quality_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified-near-dup member count, dup fraction, and mean quality.
 
     Composes the two families WITHOUT recomputation: near-dup
-    membership projects the session-memoized verified-pair frame
-    (``dedup._MATERIALIZED``), and the quality score is the exact
+    membership projects the ``lsh_pairs`` session memo, and the quality score is the exact
     ``doc_quality_scores`` composite on the 1e6 integer grid (band
     assignment is pure integer division, so band edges cannot disagree
     cross-engine). The rollup is one map-side-combined aggregate over
     a <=21-value band axis; the LEFT JOIN against the dup-doc set is
     doc-keyed and the dup side is pair-set-sized (broadcastable).
     """
-    from hadoop_cs4225_spark.operators.dedup import _memo, _verified_pairs
+    from hadoop_cs4225_spark.operators.dedup import _verified_pairs
 
-    pairs = _memo(
-        spark, sf_dir, "lsh_pairs", lambda: _verified_pairs(spark, sf_dir)
-    )
+    pairs = _verified_pairs(spark, sf_dir)
     dup = (
         pairs.select(F.col("d1").alias("d"))
         .unionAll(pairs.select(F.col("d2").alias("d")))

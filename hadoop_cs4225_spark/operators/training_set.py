@@ -70,6 +70,7 @@ from hadoop_cs4225_spark.operators.pipeline_ops import _PROBE_MOD
 from hadoop_cs4225_spark.operators.sampling import _CAP_SEED, capped_keep
 from hadoop_cs4225_spark.operators.text_analysis import _SW_ARR, QUALITY_STOPWORDS
 from hadoop_cs4225_spark.registry import register
+from hadoop_cs4225_spark.sources.sinks import session_memo
 from hadoop_cs4225_spark.sources.tables import load_table
 
 #: Decontamination drop threshold: a doc whose distinct-3-gram overlap
@@ -214,6 +215,7 @@ ORDER BY f.source
 """
 
 
+@session_memo("train_stage_flags", sources=("documents",), upstream=("cluster_labels",))
 def _stage_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, n_toks, keep1, keep2, keep3) — the cumulative
     stage-survival flags shared by the report query and the shard
@@ -225,14 +227,7 @@ def _stage_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-keeper + decon-overlap chain on identical input; one
     doc-bounded checkpoint now feeds them all. Oracles keep the inline
     CTE chain (build and probe are one logical definition)."""
-    from hadoop_cs4225_spark.operators.dedup import _memo
-
-    def build() -> DataFrame:
-        return _stage_flags_build(spark, sf_dir).localCheckpoint(
-            eager=False
-        )
-
-    return _memo(spark, sf_dir, "train_stage_flags", build)
+    return _stage_flags_build(spark, sf_dir).localCheckpoint(eager=False)
 
 
 def _stage_flags_build(spark: SparkSession, sf_dir: str) -> DataFrame:

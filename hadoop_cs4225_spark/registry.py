@@ -89,9 +89,9 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     with ``spark.catalog.clearCache()`` after every timed query; any
     other long-lived session that invokes registered queries repeatedly
     should do the same (or accept evictable MEMORY_AND_DISK blocks
-    accumulating for the session's lifetime). Session-memoized SHARED
-    frames (``dedup._memo``) deliberately use ``localCheckpoint`` so
-    they survive that ``clearCache``."""
+    accumulating for the session's lifetime). Session memos
+    (``sinks.MEMOS``) deliberately use ``localCheckpoint`` so they
+    survive that ``clearCache``."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
@@ -210,102 +210,30 @@ _PRIORITY = PERMANENT_PRIORITY + (
 )
 
 def warm_shared_frames(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    """Materialize every session-memoized shared frame (the dedup
-    ``_memo`` family) ahead of timing. bench.py calls this from its
-    warmup so the first query of a memo-sharing family is not charged
-    the whole family's pipeline build: round 8's driver bench charged
-    12.7 s to the window's first query purely for running first, and
-    the comparator then had to adjudicate a fake 12x flag (VERDICT r8
+    """Materialize every declared session memo with ``warm=True``
+    (``sinks.MEMOS``, walked upstream first) ahead of timing. bench.py
+    calls this from its warmup so the first query of a memo-sharing
+    family is not charged the whole family's pipeline build (VERDICT r8
     task 4). Each frame is bounded (short rows, capped fan-out), so
-    warming is a constant-cost preamble at any SF.
+    warming is a constant-cost preamble at any SF. The five ANN
+    method-result memos are declared ``warm=False``: they are results
+    of registered queries, so their first consumer pays them inside the
+    timed region (VERDICT r13 task 1).
 
-    Returns per-frame build seconds keyed by frame name so bench.py can
-    report what the untimed warmup actually costs (VERDICT r13 task 1:
-    the warmup had become an invisible slice of real work).
-
-    r14 (VERDICT r13 task 1): the five ANN method-RESULT memos
-    (``similarity.method_topk_frame``) are deliberately NOT warmed any
-    more — they are 5-row results of registered queries, and warming
-    them moved entire method pipelines out of the timed region. The
-    memo itself stays (two audit composers share it), but the FIRST
-    timed audit composer now pays the family build, inside the timed
-    region where it belongs."""
+    Returns per-memo build seconds keyed by memo kind, so bench.py can
+    report what the untimed warmup costs."""
     import time as _time
 
-    load_all()
-    from hadoop_cs4225_spark.operators.algo_ops import (
-        _daily_counts,
-        _order_ship_durs,
-        _orders_daily_counts,
-        _transition_counts,
-    )
-    from hadoop_cs4225_spark.operators.dedup import (
-        _cluster_labels,
-        _memo,
-        _verified_pairs,
-    )
-    from hadoop_cs4225_spark.operators.graph import (
-        _hits_pairs,
-        _mutual_topk_edges,
-        _trade_deg,
-        _trade_edges,
-        _trade_edges_deg,
-    )
-    from hadoop_cs4225_spark.operators.clustering import (
-        _kmeans_assign_frame,
-        _kmeans_cent_frame,
-    )
-    from hadoop_cs4225_spark.operators.linalg import _gram_frame
-    from hadoop_cs4225_spark.operators.similarity import (
-        _assigned_frame,
-        _brute_topk_frame,
-        _bucketed_frame,
-    )
-    from hadoop_cs4225_spark.operators.text_analysis import (
-        _bigram_doc_scores,
-    )
-    from hadoop_cs4225_spark.operators.training_set import _stage_flags
+    from hadoop_cs4225_spark.sources.sinks import walk_memos
 
-    builders = (
-        # r13 optimization round: the shared fixpoints each consumed by
-        # >= 2 registered queries (Gram matrix, k-means centroids +
-        # assignment, per-doc bigram sums) — same discipline, same
-        # bounded-rows argument.
-        ("gram64", lambda: _gram_frame(spark, sf_dir)),
-        ("kmeans_cent", lambda: _kmeans_cent_frame(spark, sf_dir)),
-        ("kmeans_assign", lambda: _kmeans_assign_frame(spark, sf_dir)),
-        ("blm_doc_scores", lambda: _bigram_doc_scores(spark, sf_dir)),
-        (
-            "lsh_pairs",
-            lambda: _memo(
-                spark,
-                sf_dir,
-                "lsh_pairs",
-                lambda: _verified_pairs(spark, sf_dir),
-            ),
-        ),
-        ("cluster_labels", lambda: _cluster_labels(spark, sf_dir)),
-        ("sim_bucketed", lambda: _bucketed_frame(spark, sf_dir)),
-        ("sim_assigned", lambda: _assigned_frame(spark, sf_dir)),
-        ("sim_brute_topk", lambda: _brute_topk_frame(spark, sf_dir)),
-        ("mutual_topk_edges", lambda: _mutual_topk_edges(spark, sf_dir)),
-        ("trade_edges", lambda: _trade_edges(spark, sf_dir)),
-        ("trade_deg", lambda: _trade_deg(spark, sf_dir)),
-        ("trade_edges_deg", lambda: _trade_edges_deg(spark, sf_dir)),
-        ("hits_pairs", lambda: _hits_pairs(spark, sf_dir)),
-        ("daily_counts", lambda: _daily_counts(spark, sf_dir)),
-        ("order_ship_durs", lambda: _order_ship_durs(spark, sf_dir)),
-        ("orders_daily_counts", lambda: _orders_daily_counts(spark, sf_dir)),
-        ("transition_counts", lambda: _transition_counts(spark, sf_dir)),
-        ("stage_flags", lambda: _stage_flags(spark, sf_dir)),
-    )
+    load_all()
     timings: dict[str, float] = {}
-    for name, build in builders:
-        t0 = _time.perf_counter()
-        # count() forces the lazy localCheckpoint to actually run; the
-        # memo then hands the materialized frame to every consumer.
-        build().count()
-        timings[name] = round(_time.perf_counter() - t0, 3)
+    for memo in walk_memos():
+        if memo.warm:
+            t0 = _time.perf_counter()
+            # count() forces the lazy localCheckpoint to actually run.
+            memo.get(spark, sf_dir).count()
+            timings[memo.kind] = round(_time.perf_counter() - t0, 3)
     return timings
 
 

@@ -15,6 +15,12 @@ copies, clustered/bucketed copies) is declared once with
 :func:`derived_layout` into :data:`LAYOUTS`, and one generic
 :func:`ensure` owns its path, freshness and commit; warm-ups and probes
 walk the table (:func:`walk_layouts`) instead of keeping lists.
+
+Session memos: every frame shared by several queries for the lifetime
+of one Spark session is declared once with :func:`session_memo` into
+:data:`MEMOS`, next to the layouts it reads, and kept in one
+:class:`SessionCache` — the same primitive that keeps the read plans of
+layouts and tables.
 """
 
 from __future__ import annotations
@@ -123,66 +129,187 @@ def derived_layout(
     return deco
 
 
+def _upstream_first(table: dict) -> list:
+    """The entries of a declaration table, each after its ``upstream``."""
+    order: dict = {}
+
+    def visit(name: str) -> None:
+        if name not in order:
+            for u in table[name].upstream:
+                visit(u)
+            order[name] = table[name]
+
+    for name in table:
+        visit(name)
+    return list(order.values())
+
+
 def walk_layouts(sources: tuple[str, ...] | None = None) -> list[Layout]:
     """Every declared layout, each after its upstream layouts; with
     ``sources``, only the layouts built from those tables alone."""
-    order: dict[str, Layout] = {}
-
-    def visit(leaf: str) -> None:
-        if leaf not in order:
-            for u in LAYOUTS[leaf].upstream:
-                visit(u)
-            order[leaf] = LAYOUTS[leaf]
-
-    for leaf in LAYOUTS:
-        visit(leaf)
     return [
-        lay for lay in order.values()
+        lay for lay in _upstream_first(LAYOUTS)
         if sources is None or set(lay.sources) <= set(sources)
     ]
 
 
-#: Memoized derived-layout read plans:
-#: ``(applicationId, normpath, fingerprint mtime_ns) -> DataFrame``. The
-#: twin of ``sources/tables._DF_CACHE`` for ``.derived`` layouts (guide
-#: §6 / §1.2: a repeated ``spark.read.parquet`` of an already-built
-#: layout pays file listing + footer schema inference — ~0.1 s of
-#: driver-side fixed cost per call, multiplied across the ~40
-#: index-reading queries of a suite run). A DataFrame is an immutable
-#: logical plan, so reuse is always semantically safe. Keyed by the
-#: commit marker's mtime so an in-session rebuild invalidates
-#: automatically, and by applicationId so a fresh session never sees
-#: another session's plans.
-_READ_CACHE: dict[tuple[str, str, int], DataFrame] = {}
+def mtime_ns(path: str) -> int | None:
+    """``st_mtime_ns`` of ``path``, or None if it does not exist."""
+    try:
+        return os.stat(path).st_mtime_ns
+    except FileNotFoundError:
+        return None
+
+
+class SessionCache:
+    """``(applicationId, key) -> (stamp, value)`` for objects that live
+    as long as one Spark session: read plans and session memos.
+
+    A lookup whose stamp differs from the stored one rebuilds the value,
+    so a rewritten file is never served from an older plan. Every insert
+    drops the entries of other applicationIds: they belong to a stopped
+    SparkContext, whose plans and checkpointed RDDs are dead, and a
+    session-restarting process must not keep them alive."""
+
+    def __init__(self) -> None:
+        self.entries: dict[tuple[str, object], tuple[object, object]] = {}
+
+    def get(self, spark: SparkSession, key, stamp: Callable[[], object], build: Callable):
+        """The value under ``key``, rebuilt with ``build()`` unless it was
+        stored under the current ``stamp()``. A built value is stored
+        under the stamp read *after* ``build`` returns, so it is keyed on
+        whatever files the build itself has just (re)written."""
+        app = spark.sparkContext.applicationId
+        hit = self.entries.get((app, key))
+        if hit is not None and hit[0] == stamp():
+            return hit[1]
+        value = build()
+        for k in [k for k in self.entries if k[0] != app]:
+            del self.entries[k]
+        self.entries[(app, key)] = (stamp(), value)
+        return value
+
+    def drop(self, spark: SparkSession, key) -> bool:
+        """Forget ``key`` for this session; True if it was cached."""
+        app = spark.sparkContext.applicationId
+        return self.entries.pop((app, key), None) is not None
+
+    def clear(self) -> None:
+        self.entries.clear()
+
+
+#: Read plans of built layouts, keyed by path and stamped with the
+#: commit marker's mtime. A repeated ``spark.read.parquet`` of a built
+#: layout pays file listing and footer schema inference (~0.1 s of
+#: driver-side cost per call, across ~40 index-reading queries); a
+#: DataFrame is an immutable plan, so reusing it is always safe, and an
+#: in-session rebuild moves the stamp.
+LAYOUT_READS = SessionCache()
 
 
 def read_derived(spark: SparkSession, path: str) -> DataFrame:
     """Read a built ``.derived`` layout with plan memoization (callers
     must have run their ``ensure_*`` first).
 
-    ADVICE r13: never cache under a missing commit marker (every
-    rebuild of a marker-less layout would map to the same key and serve
-    a stale file-listing plan forever)."""
-    app = spark.sparkContext.applicationId
-    norm = os.path.normpath(path)
-    try:
-        mtime = os.stat(os.path.join(path, DERIVED_CONFIG)).st_mtime_ns
-    except FileNotFoundError:
+    Never cached under a missing commit marker: every rebuild of a
+    marker-less layout would map to the same stamp and serve a stale
+    file-listing plan forever."""
+    marker = os.path.join(path, DERIVED_CONFIG)
+    if not os.path.exists(marker):
         return spark.read.parquet(path)
-    key = (app, norm, mtime)
-    df = _READ_CACHE.get(key)
-    if df is None:
-        # Evict entries from stopped SparkContexts and superseded
-        # rebuilds of this same path (the tables._DF_CACHE discipline).
-        for stale in [
-            k
-            for k in _READ_CACHE
-            if k[0] != app or (k[1] == norm and k[2] != mtime)
-        ]:
-            del _READ_CACHE[stale]
-        df = spark.read.parquet(path)
-        _READ_CACHE[key] = df
-    return df
+    return LAYOUT_READS.get(
+        spark, os.path.normpath(path), lambda: mtime_ns(marker),
+        lambda: spark.read.parquet(path),
+    )
+
+
+@dataclass(frozen=True)
+class Memo:
+    """One declared session memo: the frame ``build(spark, sf_dir)``
+    returns, shared by every consumer for the session's lifetime.
+
+    ``build`` returns an already-materialized frame (its last step a
+    ``localCheckpoint``, or a projection over one), so the memo outlives
+    ``clearCache()``; its checkpointed blocks are MEMORY_AND_DISK, so
+    the few corpus-linear memos (``kmeans_assign``, the trade edge
+    lists, ``blm_doc_scores``) spill to disk rather than evict.
+    ``sources`` names the tables ``build`` loads, ``layouts`` the
+    written layouts it ensures and reads (``build`` calls their
+    ``ensure_*`` itself), and ``upstream`` the memos it reads. ``warm``
+    puts the memo in the warm-up walk (:func:`walk_memos`)."""
+
+    kind: str
+    sources: tuple[str, ...]
+    layouts: tuple[str, ...]
+    upstream: tuple[str, ...]
+    warm: bool
+    build: Callable[[SparkSession, str], DataFrame]
+
+    def stamp(self, sf_dir: str) -> tuple:
+        """What the frame was built from: the mtimes of the source
+        parquets (its own and its layouts'), the mtimes of its layouts'
+        commit markers, and every upstream memo's stamp folded in, as
+        :attr:`Layout.fingerprint` folds in upstream fingerprints."""
+        tables = (*self.sources, *(t for lay in self.layouts for t in LAYOUTS[lay].sources))
+        own = (
+            *(mtime_ns(os.path.join(sf_dir, f"{t}.parquet")) for t in tables),
+            *(
+                mtime_ns(os.path.join(derived_path(sf_dir, lay), DERIVED_CONFIG))
+                for lay in self.layouts
+            ),
+        )
+        return (own, *(MEMOS[u].stamp(sf_dir) for u in self.upstream))
+
+    def get(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        return MEMO_FRAMES.get(
+            spark, (self.kind, os.path.normpath(sf_dir)),
+            lambda: self.stamp(sf_dir), lambda: self.build(spark, sf_dir),
+        )
+
+
+#: Every declared session memo by kind, filled by :func:`session_memo`.
+MEMOS: dict[str, Memo] = {}
+
+#: The built memo frames, keyed by ``(kind, sf_dir)``.
+MEMO_FRAMES = SessionCache()
+
+
+def session_memo(
+    kind: str,
+    *,
+    sources: tuple[str, ...] = (),
+    layouts: tuple[str, ...] = (),
+    upstream: tuple[str, ...] = (),
+    warm: bool = True,
+) -> Callable[[Callable], Callable[[SparkSession, str], DataFrame]]:
+    """Declare a session memo: record it in :data:`MEMOS` and turn the
+    decorated ``build(spark, sf_dir)`` into the memoized accessor under
+    the same name (see :class:`Memo`)."""
+
+    def deco(build):
+        memo = Memo(kind, tuple(sources), tuple(layouts), tuple(upstream), warm, build)
+        MEMOS[kind] = memo
+
+        @functools.wraps(build)
+        def accessor(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return memo.get(spark, sf_dir)
+
+        return accessor
+
+    return deco
+
+
+def walk_memos() -> list[Memo]:
+    """Every declared memo, each after its upstream memos."""
+    return _upstream_first(MEMOS)
+
+
+def evict_memo(spark: SparkSession, sf_dir: str, kind: str) -> bool:
+    """Drop a session memo so its next consumer rebuilds it, identically
+    (the eviction path for the corpus-linear memos). Returns True if a
+    frame was dropped; its checkpointed blocks are freed when the RDD is
+    garbage-collected (ContextCleaner)."""
+    return MEMO_FRAMES.drop(spark, (kind, os.path.normpath(sf_dir)))
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "error") -> None:

@@ -181,32 +181,63 @@ def test_read_derived_caches_only_committed_layouts(spark, tmp_path):
     assert read_derived(spark, path) is not first
 
 
-def test_ivf_pq_fingerprint_guards_method_memo(spark):
+def test_ivf_pq_fingerprint_guards_method_memo(spark, tmp_path, monkeypatch):
     """The IVF-PQ index commits under a definition fingerprint, so a
-    definition change rebuilds it AND the ANN method memos that fold
-    the fingerprint's mtime into their key."""
-    from hadoop_cs4225_spark.operators.dedup import evict_memo
-    from hadoop_cs4225_spark.operators.pq import (
-        ensure_ivf_pq_index,
-        ivf_pq_index_probe,
-    )
-    from hadoop_cs4225_spark.operators.similarity import method_topk_frame
+    definition change rebuilds it AND every memo that declares it. The
+    memo is stored under the commit marker read after its build, so the
+    rebuilt frame is a hit from then on (read before the build, the
+    frame would be stored under the tampered marker's mtime and built a
+    second time by the next call)."""
+    from hadoop_cs4225_spark.operators.pq import ivf_pq_index_probe
+    from hadoop_cs4225_spark.sources import sinks
 
-    marker = os.path.join(ensure_ivf_pq_index(spark, SF_SMOKE), DERIVED_CONFIG)
-    assert open(marker).read() == LAYOUTS["embeddings_ivf_pq"].fingerprint
-    label = "fingerprint_test"
+    monkeypatch.setattr(sinks, "DERIVED_ROOT", str(tmp_path / "derived"))
+    monkeypatch.setattr(sinks, "MEMOS", dict(sinks.MEMOS))
+    probe = sinks.session_memo(
+        "test_ivf_pq_probe", layouts=("embeddings_ivf_pq",), warm=False
+    )(lambda spark, sf_dir: ivf_pq_index_probe(spark, sf_dir).localCheckpoint(eager=False))
+    fingerprint = LAYOUTS["embeddings_ivf_pq"].fingerprint
     try:
-        first = method_topk_frame(spark, SF_SMOKE, label, ivf_pq_index_probe)
-        assert method_topk_frame(spark, SF_SMOKE, label, ivf_pq_index_probe) is first
+        first = probe(spark, SF_SMOKE)
+        marker = os.path.join(derived_path(SF_SMOKE, "embeddings_ivf_pq"), DERIVED_CONFIG)
+        assert open(marker).read() == fingerprint
+        assert probe(spark, SF_SMOKE) is first
         want = sorted(first.collect())
         with open(marker, "w") as f:
             f.write("n_sub=2")  # an index written under another definition
-        second = method_topk_frame(spark, SF_SMOKE, label, ivf_pq_index_probe)
+        second = probe(spark, SF_SMOKE)
         assert second is not first
-        assert open(marker).read() == LAYOUTS["embeddings_ivf_pq"].fingerprint
+        assert open(marker).read() == fingerprint
+        assert probe(spark, SF_SMOKE) is second
+        assert probe(spark, SF_SMOKE) is second
         assert sorted(second.collect()) == want
     finally:
-        evict_memo(spark, SF_SMOKE, f"sim:method_topk:{label}")
+        sinks.evict_memo(spark, SF_SMOKE, "test_ivf_pq_probe")
+
+
+def test_lsh_pairs_memo_follows_sig_index_marker(spark):
+    """``lsh_pairs`` reads the written signature index, so a rewrite of
+    that index's commit marker rebuilds the memo although
+    ``documents.parquet`` did not move."""
+    from hadoop_cs4225_spark.operators.dedup import (
+        _verified_pairs,
+        ensure_minhash_sig_index,
+    )
+
+    first = _verified_pairs(spark, SF_SMOKE)
+    assert _verified_pairs(spark, SF_SMOKE) is first
+    want = sorted(first.collect())
+    marker = os.path.join(ensure_minhash_sig_index(spark, SF_SMOKE), DERIVED_CONFIG)
+    before = os.stat(marker).st_mtime_ns
+    with open(marker, "w") as f:
+        f.write(LAYOUTS["documents_minhash_sigs"].fingerprint)
+    # the rewrite must move the mtime, also on a coarse filesystem clock
+    st = os.stat(marker)
+    os.utime(marker, ns=(st.st_atime_ns, max(st.st_mtime_ns, before + 1_000_000)))
+    second = _verified_pairs(spark, SF_SMOKE)
+    assert second is not first
+    assert _verified_pairs(spark, SF_SMOKE) is second
+    assert sorted(second.collect()) == want
 
 
 def test_ngram5_cold_build_leaves_no_cached_rdds(spark):

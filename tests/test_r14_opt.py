@@ -15,7 +15,7 @@ rewrites rely on, so a future edit to one side cannot silently drift:
   all-pairs array_intersect formulation (on the bounded slice);
 - ``duplicate_ngram_coverage``'s query-time plan carries no explode /
   no join / no window (all three moved to index-build time);
-- ``dedup.evict_memo`` drops a session memo and the next consumer
+- ``sinks.evict_memo`` drops a session memo and the next consumer
   rebuilds an identical frame (the storage-policy recompute path,
   VERDICT r13 task 8).
 """
@@ -134,8 +134,8 @@ def test_media_byte_minhash_query_plan_reads_indexes(spark):
 def test_evict_memo_rebuilds_identical_frame(spark):
     """Storage policy (VERDICT r13 task 8): evicting a session memo is
     safe — the next consumer rebuilds it from source, identically."""
-    from hadoop_cs4225_spark.operators.dedup import evict_memo
     from hadoop_cs4225_spark.operators.graph import _trade_deg
+    from hadoop_cs4225_spark.sources.sinks import evict_memo
 
     before = _rows(_trade_deg(spark, SF_SMOKE))
     assert evict_memo(spark, SF_SMOKE, "trade_deg") is True

@@ -296,17 +296,11 @@ def test_lineitem_woe_iv_contract(spark):
 def test_minhash_estimate_error_audit_reconciles_with_pairs(spark):
     """The audit's pair mass equals the verified-pair frame's; the
     estimate grid is matches/N_PERMS; |bias| <= mae <= 1."""
-    from hadoop_cs4225_spark.operators.dedup import (
-        N_PERMS,
-        _memo,
-        _verified_pairs,
-    )
+    from hadoop_cs4225_spark.operators.dedup import N_PERMS, _verified_pairs
 
     rows = _rows(spark, "minhash_estimate_error_audit")
     assert rows
-    pairs = _memo(
-        spark, SF_ORACLE, "lsh_pairs", lambda: _verified_pairs(spark, SF_ORACLE)
-    ).count()
+    pairs = _verified_pairs(spark, SF_ORACLE).count()
     assert sum(r.n_pairs for r in rows) == pairs
     for r in rows:
         assert 1 <= r.n_matching_bands <= N_PERMS, r
@@ -319,16 +313,14 @@ def test_dup_quality_interaction_reconciles(spark):
     """Band doc counts partition the corpus; the dup-doc mass equals
     the distinct membership of the verified-pair frame; band means sit
     inside their band's score interval."""
-    from hadoop_cs4225_spark.operators.dedup import _memo, _verified_pairs
+    from hadoop_cs4225_spark.operators.dedup import _verified_pairs
     from hadoop_cs4225_spark.sources.tables import load_table
 
     rows = _rows(spark, "dup_quality_interaction")
     assert rows
     docs = load_table(spark, SF_ORACLE, "documents").count()
     assert sum(r.n_docs for r in rows) == docs
-    pairs = _memo(
-        spark, SF_ORACLE, "lsh_pairs", lambda: _verified_pairs(spark, SF_ORACLE)
-    )
+    pairs = _verified_pairs(spark, SF_ORACLE)
     dup_docs = (
         pairs.select("d1").union(pairs.select("d2")).distinct().count()
     )

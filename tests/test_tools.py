@@ -4,6 +4,7 @@ memo semantics (round-5 review fixes)."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -66,31 +67,50 @@ def test_bench_compare_host_normalization(tmp_path, monkeypatch):
     assert bench_compare.main() == 1
 
 
-def test_materialized_memo_evicts_dead_sessions(spark):
+@pytest.mark.parametrize("user", ["memo", "read_derived", "load_table"])
+def test_session_cache_evicts_dead_sessions(spark, tmp_path, user):
     """Entries keyed under another applicationId (a stopped context's
-    checkpointed frames) must be evicted when a new session inserts."""
-    from hadoop_cs4225_spark.operators import dedup
+    plans and checkpointed frames) must be evicted when a new session
+    inserts, by every user of the session cache."""
+    from hadoop_cs4225_spark.sources import sinks, tables
 
-    saved = dict(dedup._MATERIALIZED)
+    if user == "memo":
+        cache = sinks.MEMO_FRAMES
+        memo = sinks.Memo(
+            "test_kind", (), (), (), False,
+            lambda spark, sf_dir: spark.range(1).localCheckpoint(),
+        )
+
+        def call():
+            return memo.get(spark, str(tmp_path))
+    elif user == "read_derived":
+        cache = sinks.LAYOUT_READS
+        path = str(tmp_path / "layout")
+        spark.range(3).write.parquet(path)
+        open(os.path.join(path, sinks.DERIVED_CONFIG), "w").close()
+
+        def call():
+            return sinks.read_derived(spark, path)
+    else:
+        cache = tables.TABLE_READS
+        spark.range(3).write.parquet(str(tmp_path / "t.parquet"))
+
+        def call():
+            return tables.load_table(spark, str(tmp_path), "t")
+
+    saved = dict(cache.entries)
     try:
-        dedup._MATERIALIZED.clear()
-        dead = ("app-dead-123", "/tmp/x", "lsh_pairs")
-        dedup._MATERIALIZED[dead] = "sentinel-frame"
-        built = []
-
-        def build():
-            built.append(1)
-            return spark.range(1).localCheckpoint()
-
-        out = dedup._memo(spark, "/tmp/y", "test_kind", build)
-        assert built == [1]
-        assert dead not in dedup._MATERIALIZED, "dead-session entry retained"
-        # second call is a hit — no rebuild, same frame object
-        assert dedup._memo(spark, "/tmp/y", "test_kind", build) is out
-        assert built == [1]
+        cache.clear()
+        dead = ("app-dead-123", "/tmp/x")
+        cache.entries[dead] = (0, "sentinel")
+        out = call()
+        assert dead not in cache.entries, "dead-session entry retained"
+        assert len(cache.entries) == 1
+        # second call is a hit — no rebuild, same object
+        assert call() is out
     finally:
-        dedup._MATERIALIZED.clear()
-        dedup._MATERIALIZED.update(saved)
+        cache.clear()
+        cache.entries.update(saved)
 
 
 def test_shingle_cache_released_after_pairs_build(spark, monkeypatch):
@@ -107,6 +127,7 @@ def test_shingle_cache_released_after_pairs_build(spark, monkeypatch):
     from pyspark.sql.classic.dataframe import DataFrame
 
     from hadoop_cs4225_spark.operators import dedup
+    from hadoop_cs4225_spark.sources import sinks
 
     counts = {"persist": 0, "unpersist": 0}
     real_persist, real_unpersist = DataFrame.persist, DataFrame.unpersist
@@ -123,14 +144,14 @@ def test_shingle_cache_released_after_pairs_build(spark, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "persist", persist)
     monkeypatch.setattr(DataFrame, "unpersist", unpersist)
-    dedup._MATERIALIZED.clear()
+    sinks.evict_memo(spark, SF_SMOKE, "lsh_pairs")
     try:
         df = dedup._verified_pairs(spark, SF_SMOKE)
         assert counts["persist"] == 0, counts
         assert counts["unpersist"] == 0, counts
         assert df.columns == ["d1", "d2", "jaccard"]
     finally:
-        dedup._MATERIALIZED.clear()
+        sinks.evict_memo(spark, SF_SMOKE, "lsh_pairs")
 
 
 def test_scale_probe_covers_entire_registry():

@@ -44,7 +44,7 @@ def cold_build(spark, layout, sf_dir: str) -> float:
     from hadoop_cs4225_spark.sources import sinks
 
     shutil.rmtree(sinks.derived_path(sf_dir, layout.leaf), ignore_errors=True)
-    sinks._READ_CACHE.clear()
+    sinks.LAYOUT_READS.clear()
     t0 = time.perf_counter()
     sinks.ensure(spark, sf_dir, layout)
     return time.perf_counter() - t0

@@ -591,13 +591,13 @@ def ensure_amplified_emb(spark, k: int) -> str:
 
 
 def timed(fn, spark, sf_dir: str) -> float:
-    # The LSH family shares session-scoped materialized intermediates
-    # (dedup._MATERIALIZED) — correct for the bench/driver, but here a
-    # memo hit would time a no-op and fake a ~0 exponent. Clear before
-    # every timed run so each measurement pays its own full pipeline.
-    from hadoop_cs4225_spark.operators import dedup
+    # Queries share session memos (sinks.MEMOS) — correct for a long
+    # session, but here a memo hit would time a no-op and fake a ~0
+    # exponent. Clear before every timed run so each measurement pays
+    # its own full pipeline.
+    from hadoop_cs4225_spark.sources import sinks
 
-    dedup._MATERIALIZED.clear()
+    sinks.MEMO_FRAMES.clear()
     # Also drop CacheManager entries: the LSH shingle-set persist() is
     # plan-matched, so a later query rebuilding the identical subtree
     # would be served from cache and skip exactly the corpus-scaling
